@@ -394,7 +394,7 @@ SF1_START_BUDGET_SEC = 10 * 60  # skip the leg if the retries ate this
 def _sf1_leg(spark, t_start: float) -> dict:
     if os.environ.get("SPARK_GRAFT_SF1_LEG", "1") == "0":
         return {"skipped": "disabled via SPARK_GRAFT_SF1_LEG=0"}
-    if not SF_DIR.rstrip("/").endswith("sf0.1"):
+    if os.path.basename(SF_DIR.rstrip("/")) != "sf0.1":
         # completion-gate runs at sf0.001 (tests/test_bench_gate.py)
         # and ad-hoc SF overrides don't get a scale leg
         return {"skipped": f"headline SF_DIR is {SF_DIR}, not sf0.1"}

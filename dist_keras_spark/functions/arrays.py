@@ -1,6 +1,8 @@
 """Vector math over array<float>/array<double> columns — pure Catalyst
-expressions (zip_with / aggregate), no UDFs, so similarity scans stay
-inside whole-stage codegen (SURVEY.md §2.J J4/J5).
+expressions (zip_with / aggregate), no UDFs (SURVEY.md §2.J J4/J5).
+Spark interprets these higher-order functions element by element, so
+exact all-pairs top-k goes through operators.similarity.topk_scored, whose
+numpy folds repeat the same operations in the same order.
 
 All helpers cast to double FIRST and fold left-to-right, which makes
 the result bit-identical to DuckDB's sequential list arithmetic — the

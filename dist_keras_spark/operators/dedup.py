@@ -213,21 +213,7 @@ def jaccard_pairs(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def _hashed_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """id → array of shingle hashes in [0, p). The base shingle hash
-    stays JVM-side (xxhash64 reduced mod p): a < p < 2^31 ⇒
-    a·h' + b < 2^62 — matters for the numpy uint64 arithmetic in the
-    signature UDF, which must agree with exact integer math."""
-    sets = shingle_sets(spread(df, id_col), id_col, text_col, n)
-    return sets.withColumn(
-        "hs",
-        F.transform(
-            F.col("sh"), lambda sh: F.pmod(F.xxhash64(sh), F.lit(_MINHASH_PRIME))
-        ),
-    )
-
-
-def _minhash_udf(k: int, band_count: int | None = None):
+def _minhash_udf(k: int, band_count: int):
     """Arrow-batched minhash kernel: k affine rehashes
     hᵢ(x) = (aᵢ·x + bᵢ) mod p over the precomputed shingle-hash array —
     k·|S| multiply-adds instead of k·|S| string concat+hash (≈20×
@@ -240,16 +226,15 @@ def _minhash_udf(k: int, band_count: int | None = None):
     expansion). This path is ~1s warm and flat, PROVIDED the input is
     spread across partitions (see spread()).
 
-    band_count=None → emit the k signature minima.
-    band_count=b → fold each band of r=k/b minima into ONE 64-bit
+    Each band of r=k/band_count minima folds into ONE 64-bit
     band hash inside the same numpy pass (seeded odd multipliers,
     wrap-around sum): equal band slices ⇒ equal hash, so LSH recall is
-    unchanged, and the per-row payload shrinks k/b× while the separate
+    unchanged, and the per-row payload shrinks k/band_count× while the separate
     banding expression stage disappears entirely.
     """
     from pyspark.sql.types import ArrayType, LongType
 
-    if band_count is not None and k % band_count != 0:
+    if k % band_count != 0:
         # fail at plan time, not as a cryptic reshape ValueError on
         # executors mid-job (the pre-Arrow F.slice banding silently
         # ignored the tail minima; explicit beats silent degradation)
@@ -260,23 +245,17 @@ def _minhash_udf(k: int, band_count: int | None = None):
     a_np = rng.randint(1, _MINHASH_PRIME, size=k).astype(np.uint64)[:, None]
     b_np = rng.randint(0, _MINHASH_PRIME, size=k).astype(np.uint64)[:, None]
 
-    if band_count is not None:
-        r = k // band_count
-        mix = (
-            np.random.RandomState(7)
-            .randint(1, 2**62, size=(band_count, r), dtype=np.uint64)
-            | np.uint64(1)
-        )
+    r = k // band_count
+    mix = (
+        np.random.RandomState(7)
+        .randint(1, 2**62, size=(band_count, r), dtype=np.uint64)
+        | np.uint64(1)
+    )
 
-        def rows(mins: np.ndarray) -> np.ndarray:  # (k × m) → (b × m)
-            prod = mins.reshape(band_count, r, -1) * mix[:, :, None]
-            s = prod.sum(axis=1, dtype=np.uint64)  # wrap mod 2^64: deterministic
-            return (s & np.uint64(0x7FFFFFFFFFFFFFFF)).astype(np.int64)
-
-    else:
-
-        def rows(mins: np.ndarray) -> np.ndarray:
-            return mins.astype(np.int64)
+    def rows(mins: np.ndarray) -> np.ndarray:  # (k × m) → (b × m)
+        prod = mins.reshape(band_count, r, -1) * mix[:, :, None]
+        s = prod.sum(axis=1, dtype=np.uint64)  # wrap mod 2^64: deterministic
+        return (s & np.uint64(0x7FFFFFFFFFFFFFFF)).astype(np.int64)
 
     empty_row = rows(np.full((k, 1), _MINHASH_PRIME, dtype=np.uint64))[:, 0]
 
@@ -302,27 +281,6 @@ def _minhash_udf(k: int, band_count: int | None = None):
         return pd.Series(out)
 
     return _sig
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, k: int = 64
-) -> DataFrame:
-    """MinHash signature (k minima) of the n-shingle set; seeded
-    coefficient arrays keep it deterministic. See _minhash_udf for the
-    kernel design."""
-    return _hashed_shingles(df, id_col, text_col, n).select(
-        "id", "sh", _minhash_udf(k)("hs").alias("sig")
-    )
-
-
-def minhash_band_hashes(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, k: int = 64, bands: int = 16
-) -> DataFrame:
-    """id → array of `bands` LSH band hashes, computed in one Arrow
-    pass (signature minima never leave the UDF)."""
-    return _hashed_shingles(df, id_col, text_col, n).select(
-        "id", _minhash_udf(k, bands)("hs").alias("bh")
-    )
 
 
 def minhash_lsh_pairs(

@@ -1,11 +1,12 @@
 """Similarity search over embedding columns (SURVEY.md §2.J J4/J5).
 
 Two paths:
-  - `knn_bruteforce`: exact top-k. The query set is broadcast; the
-    corpus is scanned once, cosine computed scan-side (array
-    expressions, codegen), and top-k selected with a ranked window on
-    the query id. At 100 TB the corpus never shuffles — only
-    (n_queries × k) result rows move.
+  - `knn_bruteforce` (`topk_scored`): exact top-k. The query set is
+    collected once and shipped with the scoring function; the corpus is
+    spread() and scored in Arrow batches by numpy folds, and each batch
+    emits only the candidates that can still reach a query's top k. A
+    window on the query id ranks those: about k × batches rows per
+    query shuffle, not every scored pair.
   - `knn_lsh`: approximate. Random-hyperplane LSH (sign bits of
     projections) buckets both sides; only same-bucket pairs are
     scored. Hyperplanes are seeded-deterministic literals, multi-probe
@@ -15,13 +16,161 @@ Two paths:
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from dist_keras_spark.functions.arrays import cosine_similarity
+
+# topk_scored's batch function calls this module's helpers in Python
+# workers, whose path need not hold this package: ship them by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _cosine(c: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Cosines of a corpus tile × query tile, and where they are NULL
+    (a zero norm). Every sum is a left-to-right float64 fold, the
+    operations and order of `functions.arrays.dot`/`l2_norm` and of
+    DuckDB's list_sum, so each double is bit-identical to theirs."""
+    ct, qt = np.ascontiguousarray(c.T), np.ascontiguousarray(q.T)
+    dot, term = np.zeros((len(c), len(q))), np.empty((len(c), len(q)))
+    for ci, qi in zip(ct, qt):
+        dot += np.multiply(ci[:, None], qi[None, :], out=term)
+    den = np.outer(np.sqrt(sum(x * x for x in ct)), np.sqrt(sum(x * x for x in qt)))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dot / den, den == 0
+
+
+# score -> (tile kernel, vector dtype, Spark type, admission band). A
+# kernel returns the scores and where they are NULL. Integer sums are
+# exact in any order. A cosine ranks on round(·, 6), and two raw values
+# round equal only if they differ by less than 1e-6: the band is twice
+# that, so the subtraction's own rounding cannot drop such a tie.
+_SCORES = {
+    "cosine": (_cosine, np.float64, DoubleType(), 2e-6),
+    "dot": (lambda c, q: (c @ q.T, False), np.int64, LongType(), 0),
+    "neg_sqdist": (
+        lambda c, q: (2 * (c @ q.T) - (c * c).sum(1)[:, None] - (q * q).sum(1), False),
+        np.int64,
+        LongType(),
+        0,
+    ),
+}
+_QUERY_BLOCK = 256  # queries per tile: a tile holds batch rows × 256 scores
+
+
+def _vector_matrix(vecs, dim: int | None, dtype) -> tuple[np.ndarray, np.ndarray]:
+    """Rows × dim matrix of an Arrow list column (`dim` None: the longest
+    vector's length), and which rows have a score: a NULL vector or
+    element makes the row's scores NULL, as in the array-expression
+    fold. A vector of another length is an error."""
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    lengths = pc.list_value_length(vecs)
+    valid = lengths.is_valid().to_numpy(zero_copy_only=False)
+    if dim is None:
+        dim = pc.max(lengths).as_py() or 0
+    bad = pc.drop_null(pc.filter(lengths, pc.not_equal(lengths, dim)))
+    if len(bad):
+        raise ValueError(
+            f"topk_scored: vectors of length {bad[0]} and {dim} in one search"
+        )
+    flat, shape = pc.list_flatten(vecs), (int(valid.sum()), dim)
+    mat = np.zeros((len(vecs), dim), dtype)
+    mat[valid] = flat.fill_null(0).to_numpy(zero_copy_only=False).reshape(shape)
+    holes = flat.is_null().to_numpy(zero_copy_only=False).reshape(shape).any(1)
+    valid[np.flatnonzero(valid)[holes]] = False
+    return mat, valid
+
+
+def _admit(raw, null, elig, ids, k: int, band) -> np.ndarray:
+    """The pairs of one tile that can still reach their query's top k
+    under score descending (NaN first, NULL last), then neighbor id: a
+    query with k scored candidates in the tile admits those within
+    `band` of its k-th score; otherwise all of them plus the
+    lowest-id NULL-scored ones, up to k."""
+    scored = elig & ~null
+    key = np.where(scored, np.where(np.isnan(raw), np.inf, raw), -np.inf)
+    n_scored = scored.sum(axis=0)
+    keep = scored.copy()
+    full = n_scored >= k
+    if full.any():
+        kth = np.partition(key[:, full], len(key) - k, axis=0)[len(key) - k]
+        keep[:, full] &= key[:, full] >= kth - band
+    for j in np.flatnonzero(~full):
+        nulls = np.flatnonzero(elig[:, j] & null[:, j])
+        keep[nulls[np.argsort(ids[nulls], kind="stable")[: k - n_scored[j]]], j] = True
+    return keep
+
+
+def topk_scored(
+    corpus: DataFrame,
+    queries: DataFrame,
+    score: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 5,
+) -> DataFrame:
+    """Exact top-k neighbors of every query vector, as (query_id,
+    neighbor_id, rank, score); self-matches and NULL ids excluded.
+
+    `score` is "cosine" (rounded to 6 dp, NULL when a norm is zero),
+    or for integer vectors the exact int64 "dot" product or
+    "neg_sqdist", minus the squared L2 distance. Rank orders score
+    descending, NULL last, then neighbor id, so ties reproduce across
+    engines. Every vector must have the query vectors' length.
+
+    Partition-local top-k with a global merge: the query side is
+    collected once (one Spark job) and shipped with the batch function;
+    the corpus is spread() and scored in `mapInArrow`, `_QUERY_BLOCK`
+    queries at a time so a task's memory stays bounded. Each batch
+    emits only the pairs `_admit` keeps, so the ranking window sees
+    about k × batches rows per query, not every pair.
+    """
+    from dist_keras_spark.operators.dedup import spread
+
+    kernel, dtype, raw_type, band = _SCORES[score]
+    live = F.col(id_col).isNotNull()
+    qtab = queries.select(id_col, vec_col).where(live).toArrow()
+    qmat, qvalid = _vector_matrix(qtab.column(vec_col), None, dtype)
+    qids = qtab.column(id_col).combine_chunks()
+    qids_np = qids.to_numpy(zero_copy_only=False)
+
+    def score_batches(batches):
+        for batch in batches:
+            cmat, cvalid = _vector_matrix(batch.column(vec_col), qmat.shape[1], dtype)
+            cids = batch.column(id_col)
+            cids_np = cids.to_numpy(zero_copy_only=False)
+            for lo in range(0, len(qids), _QUERY_BLOCK):
+                block = slice(lo, lo + _QUERY_BLOCK)
+                raw, null = kernel(cmat, qmat[block])
+                null = null | ~np.outer(cvalid, qvalid[block])
+                elig = cids_np[:, None] != qids_np[None, block]
+                rows, cols = np.nonzero(_admit(raw, null, elig, cids_np, k, band))
+                raw = pa.array(raw[rows, cols], mask=null[rows, cols])
+                yield pa.RecordBatch.from_arrays(
+                    [qids.take(cols + lo), cids.take(rows), raw], names=out.names
+                )
+
+    types = queries.schema[id_col].dataType, corpus.schema[id_col].dataType, raw_type
+    out = StructType(list(map(StructField, ["query_id", "neighbor_id", "raw"], types)))
+    cand = spread(corpus.select(id_col, vec_col).where(live), id_col)
+    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
+    return (
+        cand.mapInArrow(score_batches, out)
+        .withColumn("score", F.round("raw", 6) if score == "cosine" else F.col("raw"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "score")
+    )
 
 
 def knn_bruteforce(
@@ -31,46 +180,10 @@ def knn_bruteforce(
     vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
-
-    Returns (query_id, neighbor_id, rank, cosine); self-matches
-    excluded. Ranking ties broken by neighbor id on the cosine rounded
-    to 6dp so the order is reproducible across engines.
-    """
-    from dist_keras_spark.functions.arrays import dot, l2_norm
-    from dist_keras_spark.operators.dedup import spread
-
-    # precompute norms per side so each pair costs ONE fold (the dot),
-    # not three — at 100 TB the pairwise stage dominates everything.
-    # spread() forces real parallelism on the corpus scan (small local
-    # fixture files arrive as one partition).
-    corpus = spread(corpus, id_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        l2_norm(vec_col).alias("qnorm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        l2_norm(vec_col).alias("cnorm"),
-    )
-    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).withColumn(
-        "cosine",
-        F.round(
-            F.when(
-                F.col("qnorm") * F.col("cnorm") != 0,
-                dot("qvec", "cvec") / (F.col("qnorm") * F.col("cnorm")),
-            ),
-            6,
-        ),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    """Exact top-k cosine neighbors for each query vector: the cosine
+    `topk_scored`, as (query_id, neighbor_id, rank, cosine)."""
+    out = topk_scored(corpus, queries, "cosine", id_col, vec_col, k)
+    return out.withColumnRenamed("score", "cosine")
 
 
 def approx_quantile_buckets(

@@ -902,7 +902,9 @@ def ab_test_t_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.var_samp(va).alias("v_a"),
         F.var_samp(vb).alias("v_b"),
     )
-    return stats.select(
+    # an empty arm gives no row, as the oracle's per-arm cross join does
+    both = stats.filter((F.col("n_a") > 0) & (F.col("n_b") > 0))
+    return both.select(
         "n_a",
         "n_b",
         F.round("m_a", 4).alias("mean_a"),

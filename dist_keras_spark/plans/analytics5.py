@@ -25,6 +25,7 @@ from dist_keras_spark.functions.arrays import (
 from dist_keras_spark.operators.dedup import substring_dup_pairs
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.operators.dedup import spread as _spread
+from dist_keras_spark.operators.similarity import topk_scored
 from dist_keras_spark.sources.tables import load_table as _lt
 
 
@@ -148,9 +149,10 @@ def _argmin_code(cdist: DataFrame) -> DataFrame:
     distance frame (the hottest frame in PQ coding) was demoted to
     Sort + SortAggregate at BOTH partial and final levels. Packing
     the pair into ONE bigint min(d2·64 + c) keeps the aggregate
-    hash-based. Exact: d2 ≥ 0 (integer sum of squares) and
-    0 ≤ c < 16 < 2**_CODE_BITS, so the packed order IS the
-    lexicographic (d2, c) order bit for bit. Returns
+    hash-based. Exact while d2 ≥ 0 (integer sum of squares) and
+    0 ≤ c < 2**_CODE_BITS: the packed order IS the lexicographic
+    (d2, c) order bit for bit. A row outside that range fails the
+    query rather than corrupt the argmin. Returns
     (vec_id, s, code, d2).
 
     Same-session interleaved A/B (tools-pattern, variants alternated
@@ -164,13 +166,17 @@ def _argmin_code(cdist: DataFrame) -> DataFrame:
     either way. Kept for the strictly lighter plan (no Sort nodes)
     and the marginal sf0.1 win; oracle hash-green at 3 SFs for all 8
     consumer queries."""
+    packed = F.when(
+        (F.col("d2") >= 0) & (F.col("c") >= 0) & (F.col("c") < 1 << _CODE_BITS),
+        F.shiftleft(F.col("d2"), _CODE_BITS) + F.col("c"),
+    ).otherwise(
+        F.raise_error(
+            F.lit(f"_argmin_code: needs d2 >= 0 and 0 <= code < {1 << _CODE_BITS}")
+        )
+    )
     return (
         cdist.groupBy("vec_id", "s")
-        .agg(
-            F.min(
-                F.shiftleft(F.col("d2"), _CODE_BITS) + F.col("c")
-            ).alias("mp")
-        )
+        .agg(F.min(packed).alias("mp"))
         .select(
             "vec_id",
             "s",
@@ -913,7 +919,7 @@ def pq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the IVF-PQ one to certify cell-pruning loss too.
 
     Two-step regime note (sf1→sf2 sweep, r12): exp 1.95 — the exact
-    arm is a queries×corpus crossJoin and the panel scales with the
+    arm scores queries × corpus and the panel scales with the
     corpus, so the audit is Θ(N²/20) BY DEFINITION (recall against
     the exact top-5; the mrl_truncation_recall / colbert_maxsim
     status). Declared exact-audit baseline; the registered scale-safe
@@ -922,36 +928,8 @@ def pq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq5 = pq_adc_top5(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    # spread() first (r10 scaling sweep): the corpus-wide quantize +
-    # subspace-distance folds are INTERPRETED HOFs, and the local
-    # single-partition scan would serialize them onto one core; at
-    # cluster scale this is a no-op-sized shuffle (dedup.spread).
-    emb = _spread(_lt(spark, sf_dir, "embeddings"), "vec_id")
-    q = emb.select(
-        "vec_id",
-        _quant().alias("v"),
-    )
-    queries = q.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    d2 = F.aggregate(
-        F.zip_with("v", "qv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    ex_scored = (
-        q.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), d2.alias("d2"))
-    )
-    exw = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
-    )
-    ex5 = (
-        ex_scored.withColumn("ex_rank", exw)
-        .filter(F.col("ex_rank") <= 5)
-        .select("query_id", "neighbor_id")
-    )
+    q = _lt(spark, sf_dir, "embeddings").select("vec_id", _quant().alias("v"))
+    ex5 = _exact_l2_rank(q, 5).select("query_id", "neighbor_id")
     joined = ex5.join(
         pq5.withColumnRenamed("neighbor_id", "pq_neighbor").withColumnRenamed(
             "query_id", "pq_query"
@@ -1720,7 +1698,7 @@ def rrf_fusion_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 to fuse sparse+dense retrieval the same way.
 
     Two-step regime note (sf1→sf2 sweep, r11): exp 1.80 — the exact
-    integer-L2 arm is a queries×corpus crossJoin, Θ(N²/20) by
+    integer-L2 arm scores queries × corpus, Θ(N²/20) by
     construction when queries scale with the corpus (the
     knn_bruteforce regime). Kept as the exact ORACLE baseline; the
     registered scale-safe path is rrf_fusion_scaled_top5 (scaled IVF
@@ -1731,29 +1709,21 @@ def rrf_fusion_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster scale this is a no-op-sized shuffle (dedup.spread).
     emb = _spread(_lt(spark, sf_dir, "embeddings"), "vec_id")
     q = emb.select("vec_id", _quant().alias("v"))
-    queries = q.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    d2 = F.aggregate(
-        F.zip_with("v", "qv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    exw = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
-    )
-    exr = (
-        q.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), d2.alias("d2"))
-        .withColumn("r_ex", exw)
-        .filter(F.col("r_ex") <= 20)
-        .select("query_id", "neighbor_id", "r_ex")
+    exr = _exact_l2_rank(q, 20).select(
+        "query_id", "neighbor_id", F.col("rank").alias("r_ex")
     )
     # PQ ranking to depth 20 (pq_adc_top5 cuts at 5; recompute rank
     # from its scored internals the same way, via the registered
     # query's building blocks)
     return _rrf_fuse(exr, _pq_rank20(q))
+
+
+def _exact_l2_rank(q: DataFrame, depth: int) -> DataFrame:
+    """Exact top-`depth` of every 20th quantized vector (vec_id, v) by
+    squared L2 distance, ties to the lower id: the Θ(N²/20) exact arm
+    of pq_recall_vs_exact and rrf_fusion_top5 (similarity.topk_scored)."""
+    queries = q.filter(F.col("vec_id") % 20 == 0)
+    return topk_scored(q, queries, "neg_sqdist", "vec_id", "v", depth)
 
 
 def _rrf_fuse(exr: DataFrame, pqr: DataFrame) -> DataFrame:

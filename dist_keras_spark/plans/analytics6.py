@@ -306,7 +306,7 @@ def ranking_mrr_ndcg_at5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the metric auditable per query.
 
     100 TB shape: the ranking reuses knn_int8_quantized_top5's plan
-    (broadcast queries, corpus never shuffles); the label joins are
+    (partition-local exact top-k, similarity.topk_scored); the label joins are
     id-keyed lookups (broadcast at fixture scale, shuffle-hash at
     100 TB); the metric agg groups on query_id — the data-scaling
     key. The oracle WRAPS the registered int8 oracle as a CTE, so the
@@ -1514,8 +1514,8 @@ def hard_negative_mining_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking (and wrapping its registered oracle as a CTE so both
     stay pinned together).
 
-    100 TB shape: identical to the int8 kNN (broadcast queries,
-    corpus never shuffles, integer scores) plus two id-keyed label
+    100 TB shape: identical to the int8 kNN (partition-local exact
+    top-k over integer scores) plus two id-keyed label
     lookups and a scan-side label filter — mining piggybacks on the
     retrieval infrastructure, which is the point of the recipe.
 

@@ -618,7 +618,7 @@ def mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     production dial (a FIXED query panel — recall estimates converge
     with panel size) keeps this exact form at Θ(panel·N).
 
-    100 TB shape: both rankings broadcast the query side and scan the
+    100 TB shape: both rankings collect the query side and score the
     corpus once each (the truncated scan reads 4× fewer bytes — at
     scale it reads a separate 16-dim projection column and the
     measured recall justifies or rejects that index)."""

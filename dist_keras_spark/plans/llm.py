@@ -28,7 +28,7 @@ from dist_keras_spark.operators.dedup import (
     minhash_lsh_pairs,
     simhash_pairs,
 )
-from dist_keras_spark.operators.similarity import knn_bruteforce, knn_lsh
+from dist_keras_spark.operators.similarity import knn_bruteforce, knn_lsh, topk_scored
 from dist_keras_spark.operators.utils import bounded_window_key
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.sources.tables import load_table as _lt
@@ -645,13 +645,15 @@ SELECT query_id, neighbor_id, knn_rank, cosine FROM ranked WHERE knn_rank <= 5
 """,
 )
 def knn_bruteforce_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5 exact path: top-5 cosine neighbors for every 20th vector.
-    Query side broadcast; corpus scanned once, never shuffled.
+    """J5 exact path: top-5 cosine neighbors for every 20th vector, by
+    similarity.topk_scored — the query side collected once, the spread
+    corpus scored in Arrow batches, and only each batch's candidates
+    for a query's top 5 shuffled to the ranking window.
 
-    Scale regime (two-step sweep, bench_extended_trace): the query set
-    grows with the corpus, so pairwise work is Θ(N²/20) BY
-    CONSTRUCTION — exp 0.82 at sf0.1→sf1 (overhead still dominates),
-    1.31 at sf1→sf2 as the pairwise stage takes over. Carried as the
+    Scale regime: the query set grows with the corpus, so pairwise
+    work is Θ(N²/20) BY CONSTRUCTION. Warm, 4 cores: 1.1-1.6s at sf0.1
+    and 2.4-3.0s at sf1, where the array-expression fold it replaced
+    took 1.6-2.7s and 63-65s, with identical rows. Carried as the
     exact-recall oracle the sub-quadratic registered paths
     (knn_ivf_top5, knn_ivf_pq_adc, knn_lsh_top5) re-rank against."""
     e = _lt(spark, sf_dir, "embeddings")
@@ -1313,8 +1315,8 @@ def cosine_pairs_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: pairwise cosine ≥ 0.2 between sampled queries and the corpus
     — the pairwise-similarity primitive under the dedup/knn operators.
 
-    Pairwise-stage discipline (r10 scaling sweep, the knn_bruteforce
-    pattern): the per-pair fold is an INTERPRETED HOF, so (a) spread()
+    Pairwise-stage discipline (r10 scaling sweep): the per-pair fold
+    is an INTERPRETED HOF, so (a) spread()
     the corpus — the single-partition local scan otherwise serializes
     the whole pairwise stage onto one core; (b) precompute norms per
     SIDE so each pair costs one fold, not three; (c) compute the
@@ -1671,66 +1673,36 @@ def knn_int8_quantized_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scale = 127/max|x|, q = round(x·scale)) then INTEGER dot-product
     top-5 — the memory-bandwidth play for 100 TB ANN: a quantized
     corpus is 4× smaller than float32, and the score is exact integer
-    arithmetic, so the DuckDB oracle replays it bit-for-bit (no float
-    rounding risk anywhere — quantization is deterministic IEEE math,
-    scoring is int64). Shape: quantization is scan-side column math
-    (transform/zip_with/aggregate, no UDF), the query side (every
-    20th vector) broadcasts, the corpus spreads once then never
-    shuffles; ranking is a per-query-key window.
+    arithmetic, so the DuckDB oracle replays it bit-for-bit.
+    Quantization is scan-side column math; the ranking is
+    similarity.topk_scored's int64 path, knn_bruteforce_top5's shape.
 
-    spread() on the corpus is load-bearing here (r10 scaling sweep):
-    the per-pair zip_with/aggregate fold is INTERPRETED, and without
-    it the whole pairwise stage ran on the single input partition the
-    local fixture scan produces — 124.5s at sf1 vs knn_bruteforce's
-    6.5s (which spreads); with it the stage parallelizes like
-    bruteforce. At cluster scale the scan is already split and the
-    spread is a no-op-sized shuffle (see dedup.spread).
-
-    Scale regime: same Θ(N²/20) construction as knn_bruteforce_top5
-    (queries scale with the corpus) — two-step sweep 0.78 at
-    sf0.1→sf1, 1.98 at sf1→sf2 once the interpreted pairwise fold
-    dominates. Exact oracle baseline; the quantization's production
-    role is inside the bounded-candidate paths (pq_adc re-rank,
-    ivf probes), not corpus×query scans."""
-    from dist_keras_spark.operators.dedup import spread
-
-    e = spread(_lt(spark, sf_dir, "embeddings"), "vec_id")
+    Scale regime: same Θ(N²/20) construction as knn_bruteforce_top5.
+    Warm, 4 cores: 3.4-3.5s at sf1, where the interpreted zip_with
+    fold it replaced took 64-73s, with identical rows. Exact oracle
+    baseline; the quantization's production role is inside the
+    bounded-candidate paths (pq_adc re-rank, ivf probes), not
+    corpus×query scans."""
+    e = _lt(spark, sf_dir, "embeddings")
     scale = F.lit(127.0) / F.array_max(
         F.transform("embedding", lambda y: F.abs(y.cast("double")))
     )
-    # quantized values stored as LONG up front: the hot dot product
-    # then multiplies longs directly — no per-element casts inside the
-    # 200k-pair zip_with (measured ~25% of its runtime)
+    # Spark's round (HALF_UP, as DuckDB's) quantizes; numpy's rounds
+    # half to even, so quantization stays a Spark expression. The scale
+    # rides in as a repeated array: referenced inside the lambda, it
+    # would be recomputed for every element (3x the sf1 time).
     q8 = e.select(
         "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * scale).cast("long")
+        F.zip_with(
+            "embedding",
+            F.array_repeat(scale, F.size("embedding")),
+            lambda x, s: F.round(x.cast("double") * s).cast("long"),
         ).alias("v"),
     )
-    queries = q8.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    dot8 = F.aggregate(
-        F.zip_with("v", "qv", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        q8.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot8.alias("dot8"),
-        )
-    )
-    rn = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.desc("dot8"), F.asc("neighbor_id"))
-    )
-    return (
-        scored.withColumn("knn_rank", rn)
-        .filter(F.col("knn_rank") <= 5)
-        .select("query_id", "neighbor_id", "knn_rank", "dot8")
+    queries = q8.filter(F.col("vec_id") % 20 == 0)
+    out = topk_scored(q8, queries, "dot", "vec_id", "v", k=5)
+    return out.select(
+        "query_id", "neighbor_id", F.col("rank").alias("knn_rank"), F.col("score").alias("dot8")
     )
 
 

@@ -8,6 +8,10 @@ return *lazy* DataFrames, never cached/collected.
 The `events.ts` column has shipped as both nanosecond and microsecond
 parquet across fixture generations; `normalize_events_ts` branches on
 the observed read schema so either encoding works (SURVEY.md §7.3).
+
+Schema inference is a Spark job per read, so `read_parquet` keeps
+each file's inferred schema for the process and passes it on later
+reads.
 """
 
 from __future__ import annotations
@@ -15,6 +19,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -39,6 +44,33 @@ TABLE_NAMES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Lazy scan of one parquet file that infers its schema once: the
+    StructType is cached under the file's path, size and mtime and the
+    inference confs, so a file rewritten in place (say, `events.ts`
+    regenerated from µs to ns) or a changed conf infers again. A
+    directory or a non-local path infers on every read."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
+    key += tuple(map(spark.conf.get, _INFERENCE_CONFS))
+    if key not in _SCHEMAS:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -73,11 +105,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     see `normalize_events_ts`)."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # Harmless for µs files; required to even read a ns file.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalize_events_ts(read_parquet(spark, path))
+    return read_parquet(spark, path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

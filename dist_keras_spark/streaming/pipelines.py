@@ -24,10 +24,10 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a streaming source with the same ts
     normalization as the batch loader (sources.tables.normalize_events_ts
     — schema-guarded, handles both ns and µs fixture generations)."""
-    from ..sources.tables import normalize_events_ts
+    from ..sources.tables import normalize_events_ts, read_parquet
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # FileStreamSource needs a directory; glob-filter down to the table
     raw = (
         spark.readStream.schema(batch_schema)

@@ -783,3 +783,28 @@ def test_ohlc_matches_pandas(spark, sf_dir):
             len(g),
         )
         assert got[str(day)] == expect, day
+
+
+def test_ab_test_empty_arm_returns_no_row_like_the_oracle(spark, tmp_path):
+    """With every event in arm A, the oracle's per-arm cross join has no
+    row; the keyless conditional aggregate must not emit one of NULLs."""
+    import hashlib
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dist_keras_spark.plans.registry import ORACLE
+
+    ids = [
+        i for i in range(1, 200)
+        if int(hashlib.md5(f"{i}:ab".encode()).hexdigest()[:8], 16) % 2 == 0
+    ][:10]
+    pq.write_table(
+        pa.table({"event_id": ids, "value": [float(i) for i in ids]}),
+        str(tmp_path / "events.parquet"),
+    )
+    assert QUERIES["ab_test_t_stat"](spark, str(tmp_path)).collect() == []
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    assert con.execute(ORACLE["ab_test_t_stat"]).fetchall() == []

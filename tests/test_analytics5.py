@@ -207,3 +207,20 @@ def test_substring_poly_twin_matches_md5_pairs(spark, sf_dir):
         for r in substring_dedup_50gram_poly(spark, sf_dir).collect()
     }
     assert md5_pairs == poly_pairs
+
+
+def test_argmin_code_fails_loudly_outside_the_bit_pack(spark):
+    """The packed min(d2·2**_CODE_BITS + c) is the (d2, c) argmin only for
+    0 <= c < 2**_CODE_BITS and d2 >= 0; anything else must fail the query,
+    not return a silently wrong code."""
+    import pytest
+
+    from dist_keras_spark.plans.analytics5 import _CODE_BITS, _argmin_code
+
+    schema = "vec_id bigint, s int, c bigint, d2 bigint"
+    ok = spark.createDataFrame([(1, 0, 3, 5), (1, 0, 2, 5), (1, 0, 7, 4)], schema)
+    assert [tuple(r) for r in _argmin_code(ok).collect()] == [(1, 0, 7, 4)]
+    for c, d2 in ((1 << _CODE_BITS, 0), (0, -1)):
+        bad = spark.createDataFrame([(1, 0, 3, 5), (1, 0, c, d2)], schema)
+        with pytest.raises(Exception, match="_argmin_code"):
+            _argmin_code(bad).collect()

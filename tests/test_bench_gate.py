@@ -244,3 +244,18 @@ def test_drift_labels_always_include_the_ratio_drifter():
     assert top["d"]["anchor_sec"] == 0.2 and top["d"]["now_sec"] == 0.3
     # ratio-drifters lead, then the largest remaining movers to k
     assert list(top)[0] == "d" and len(top) == 3
+
+
+def test_sf1_leg_gates_on_the_sf_dir_basename(monkeypatch):
+    """The sf1 leg runs only when the headline SF_DIR's last path segment
+    IS sf0.1 — not when it merely ends in that string."""
+    import time
+
+    b = _bench()
+    monkeypatch.delenv("SPARK_GRAFT_SF1_LEG", raising=False)
+    monkeypatch.setattr(b, "SF_DIR", "/data/mysf0.1")
+    assert "not sf0.1" in b._sf1_leg(None, time.perf_counter())["skipped"]
+    # past the basename gate, an exhausted start budget is the next skip
+    monkeypatch.setattr(b, "SF_DIR", "/data/sf0.1/")
+    late = time.perf_counter() - b.SF1_START_BUDGET_SEC - 1
+    assert b._sf1_leg(None, late)["skipped"].startswith("headline passes took")

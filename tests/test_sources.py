@@ -279,3 +279,54 @@ def test_python_datasource_stream_equals_batch(spark):
     assert sorted(map(tuple, drained.collect())) == sorted(
         map(tuple, batch.collect())
     )
+
+
+def test_schema_cache_reinfers_rewritten_file_and_changed_conf(spark, tmp_path):
+    """load_table reads with a cached inferred schema, keyed by file
+    identity and the inference confs: a repeat read runs no Spark job, an
+    events file rewritten from µs to ns at the same path is inferred again
+    (and takes normalize_events_ts's bigint branch), and a changed
+    inference conf misses the cache."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stamps = [dt.datetime(2024, 3, 1, 12, 0, 0, 123456), dt.datetime(2024, 3, 2, 1, 2, 3, 4)]
+
+    def write(ts_type):
+        table = pa.table(
+            {"event_id": [1, 2], "user_id": [10, 20], "event_type": ["click", "view"],
+             "ts": pa.array(stamps, type=ts_type), "value": [1.5, 2.5], "props": ["{}", "{}"]}
+        )
+        pq.write_table(table, str(tmp_path / "events.parquet"))
+
+    sc = spark.sparkContext
+
+    def load(group):
+        sc.setJobGroup(group, group)
+        try:
+            df = load_table(spark, str(tmp_path), "events")
+        finally:
+            sc.setJobGroup("", "")
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    write(pa.timestamp("us"))
+    first, first_jobs = load("schema-cache-miss")
+    again, again_jobs = load("schema-cache-hit")
+    assert first_jobs > 0 and again_jobs == 0
+    assert dict(again.dtypes)["ts"] == "timestamp_ntz"
+
+    write(pa.timestamp("ns"))
+    rewritten, _ = load("schema-cache-rewritten")
+    assert dict(rewritten.dtypes)["ts"] == "timestamp"  # the bigint branch
+    assert [r["ts"] for r in rewritten.orderBy("event_id").collect()] == stamps
+
+    write(pa.timestamp("us"))
+    conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    spark.conf.set(conf, "false")
+    try:
+        assert dict(load("schema-cache-conf")[0].dtypes)["ts"] == "timestamp"
+    finally:
+        spark.conf.unset(conf)
+    assert dict(load("schema-cache-conf-reset")[0].dtypes)["ts"] == "timestamp_ntz"

@@ -25,7 +25,7 @@ AUDITED = {
     "join_asof": "union + window: ONE shuffle on the join key, no range-join explosion",
     "join_theta_range": "equi component drives a sort-merge join; range predicates post-filter",
     "minhash_lsh_neardup": "signatures scan-side; shuffles only at band buckets + verify join",
-    "knn_bruteforce_top5": "query side broadcast (nested-loop over broadcast), corpus never shuffles",
+    "knn_bruteforce_top5": "query side collected once; spread corpus scored in PythonMapInArrow batches; only per-batch top-k candidates shuffle to the query_id window",
     "events_session_window": "session window state keyed by user",
     "ml_linear_scorer": "pure column expressions — zero Python, zero shuffles",
     "tpch_q4_order_priority": "correlated EXISTS decorrelated to a left-semi join; date range pushed to the orders scan",
@@ -58,7 +58,7 @@ AUDITED = {
     "merge_upsert_scd": "MERGE as one full-outer sort-merge join on the key; the change-set aggregate shuffles on the same key so the partitioning is reused",
     "unpivot_measures": "melt is a narrow map-side Expand — zero Exchange nodes in the plan",
     "agg_grouping_sets": "one scan + Expand(3 grouping combos) + single hash agg — strictly cheaper than 3 unioned aggregates at 100 TB (scan dominates)",
-    "knn_int8_quantized_top5": "int8 quantization scan-side (transform/zip_with, no UDF); query side broadcast; integer dot exact; corpus spreads once (no-op-sized at cluster scale — r10: the interpreted pairwise fold must parallelize) then only the per-query-key ranking window shuffles",
+    "knn_int8_quantized_top5": "int8 quantization scan-side (transform, no UDF); then the knn_bruteforce_top5 shape with exact int64 dot products",
     "cosine_pairs_threshold": "r10 rewrite: spread corpus, per-side norms precomputed, interpreted cosine computed ONCE in a projection then filtered (no CSE exists for interpreted HOFs across filter+project); query side broadcast",
     "join_asof_forward": "forward as-of via the same union+window operator (first() over [current,+inf)) — ONE key shuffle, never the quadratic range join the oracle spells out",
     "win_cumulative_distinct": "running distinct as first-occurrence flag + running sum — O(1) window state vs collect_set-over-window's per-row set",
