@@ -30,39 +30,32 @@ from dist_keras_spark.functions.text import shingles, tokens
 _MINHASH_PRIME = 2_147_483_647
 
 
-def _stage(df: DataFrame, materialize: str | None) -> DataFrame:
+def _stage(df: DataFrame) -> DataFrame:
     """Materialize an intermediate to truncate expression-heavy lineage.
 
-    'local'   — localCheckpoint(eager): blocks live on executors; right
-                for single-node / interactive use, NOT for 100 TB (the
-                signature set must fit in cluster block storage and
-                dies with executors). Retained-block cost (ADVICE
-                r13): each invocation checkpoints a fresh RDD and
-                nothing unpersists it until the DataFrame is GC'd on
-                the driver (ContextCleaner then drops the blocks), so
-                tight re-invocation loops (bench min-of-N, ab_time)
-                accumulate executor block-manager storage between
-                GCs. Fine for fixture-sized staged frames (narrow
-                id/hash columns); at larger SFs prefer 'storage' or
-                None, or hold no references so the cleaner can run.
-                Also note eager=True runs Spark jobs at CONSTRUCTION
-                time: a query function that stages this way executes
-                work before any action on the returned DataFrame.
-    'storage' — reliable checkpoint to spark.sparkContext's checkpoint
-                dir (HDFS/object store at scale); caller must have
-                called setCheckpointDir.
-    None      — no materialization: pure lazy lineage. Subtrees may be
-                re-planned/re-executed by downstream stages, trading
-                recompute for zero storage — the right call when the
-                input dwarfs cluster storage.
+    The package's one staging rule: `checkpoint(eager=True)` when the
+    SparkContext has a checkpoint dir (the deployment's reliable store,
+    HDFS/object store at scale), else `localCheckpoint(eager=True)`.
+    Spark MLlib's `checkpointInterval` uses the same convention.
+
+    Local checkpoints are right for single-node / interactive use, NOT
+    for 100 TB: the staged frame must fit in executor block storage
+    and dies with the executors. Retained-block cost (ADVICE r13): each
+    invocation checkpoints a fresh RDD and nothing unpersists it until
+    the DataFrame is GC'd on the driver (ContextCleaner then drops the
+    blocks), so tight re-invocation loops (bench min-of-N, ab_time)
+    accumulate executor block-manager storage between GCs. Fine for
+    fixture-sized staged frames (narrow id/hash columns); at larger SFs
+    set a checkpoint dir, or hold no references so the cleaner can run.
+
+    Both branches are eager: Spark jobs run at CONSTRUCTION time, so a
+    query function that stages executes work before any action on the
+    returned DataFrame, and the staged plan is frozen under the confs
+    in effect at the call.
     """
-    if materialize == "local":
-        return df.localCheckpoint(eager=True)
-    if materialize == "storage":
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
-    if materialize is None:
-        return df
-    raise ValueError(f"unknown materialize strategy: {materialize!r}")
+    return df.localCheckpoint(eager=True)
 
 
 def exact_dedup(
@@ -292,7 +285,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.8,
     max_bucket: int | None = 1000,
-    materialize: str | None = "local",
     full_output: bool = False,
 ) -> DataFrame:
     """J2: MinHash+LSH near-duplicate pairs, verified with exact Jaccard.
@@ -313,11 +305,6 @@ def minhash_lsh_pairs(
     lossless form should pass None rather than a corpus-sized bound,
     which would cost an eager count() action at plan-construction time
     just to build an inert predicate (ADVICE r12).
-
-    `materialize` sizes the lineage-truncation strategy to the corpus
-    (see `_stage`): 'local' (default) for single-node runs, 'storage'
-    for cluster-scale corpora with a checkpoint dir, None to keep the
-    plan fully lazy (no materialization at all).
     """
     # ONE pass computes the shingle sets; both the LSH candidate side
     # (→ xxhash64 → Arrow band-hash kernel) and the exact-Jaccard
@@ -331,14 +318,11 @@ def minhash_lsh_pairs(
     # deterministic element order. Band hashes come straight out of
     # the Arrow kernel (signature minima never leave the UDF): no
     # separate banding expression stage, and the shuffled payload is
-    # `bands` longs per doc instead of k. `materialize` (see _stage)
-    # sizes the lineage truncation: 'local' for single-node, 'storage'
-    # at cluster scale, None for fully-lazy (recompute instead of pin).
+    # `bands` longs per doc instead of k.
     sets = _stage(
         shingle_sets(spread(df, id_col), id_col, text_col, n).withColumn(
             "ns", F.size("sh")
-        ),
-        materialize,
+        )
     )
     hashed = sets.withColumn(
         "hs",
@@ -354,8 +338,7 @@ def minhash_lsh_pairs(
     banded = _stage(
         hashed.select("id", _minhash_udf(k, bands)("hs").alias("bh")).select(
             "id", F.posexplode("bh").alias("band", "bh")
-        ),
-        materialize,
+        )
     )
     # Candidate pairs via bucket COUNT pre-prune + self-join — not
     # collect_set. count() partial-aggregates map-side (the shuffle
@@ -464,21 +447,19 @@ def simhash_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     radius: int = 3,
-    materialize: str | None = "local",
 ) -> DataFrame:
     """SimHash near-dup pairs within a Hamming radius: band the 60-bit
     signature into 4×15-bit sub-keys (pigeonhole: ≤3 differing bits →
     at least one band matches exactly), bucket-join on each band, then
     verify bit_count(xor) <= radius.
 
-    `materialize` stages the signatures (one long per doc) before the
-    band explode and the self-join — without it the md5+Arrow signature
+    The signatures (one long per doc) are staged via `_stage` before
+    the band explode and the self-join — lazy, the md5+Arrow signature
     subtree re-evaluates once per join side and the runtime blows up
-    ~6× (same reason minhash_lsh_pairs stages its band hashes; see
-    `_stage` for the local/storage/None trade at scale)."""
+    ~6× (same reason minhash_lsh_pairs stages its band hashes)."""
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
-    sigs = _stage(simhash(spread(df, id_col), id_col, text_col), materialize)
+    sigs = _stage(simhash(spread(df, id_col), id_col, text_col))
     banded = sigs.select(
         "id",
         "simhash",
@@ -532,10 +513,9 @@ def neardup_clusters(
     edge list): each round is one shuffle-join keyed on vertex id, and
     the round count is the graph diameter (near-dup clusters are
     shallow — pairs/chains — so 2-3 rounds in practice). Labels are
-    staged per round (`localCheckpoint`) to truncate the growing
-    lineage; at cluster scale swap for `checkpoint` to reliable
-    storage. The fixpoint is unique regardless of execution order, so
-    the result is deterministic and SQL-replayable (recursive CTE).
+    staged per round (`_stage`) to truncate the growing lineage. The
+    fixpoint is unique regardless of execution order, so the result is
+    deterministic and SQL-replayable (recursive CTE).
 
     `max_iter` bounds a pathological path-graph; hitting it raises
     rather than returning a half-converged labeling.
@@ -544,25 +524,24 @@ def neardup_clusters(
     # candidate-generation lineage (inverted-index joins), and every
     # propagation round + change-count references it — without this,
     # the pair generation re-executes ~2× per round (measured ~30%+ off
-    # leakage_safe_split_assign at sf0.1; see bench_extended_trace). Ids only, so the
-    # checkpoint is tiny; at cluster scale swap for checkpoint() like
-    # the labels note below.
-    und = (
+    # leakage_safe_split_assign at sf0.1; see bench_extended_trace). Ids
+    # only, so the checkpoint is tiny.
+    und = _stage(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
-        .localCheckpoint(eager=True)
     )
-    labels = vertices.select(F.col(id_col).alias("vid"), F.col(id_col).alias("label"))
-    labels = labels.localCheckpoint(eager=True)
+    labels = _stage(
+        vertices.select(F.col(id_col).alias("vid"), F.col(id_col).alias("label"))
+    )
     for _ in range(max_iter):
         neighbor_min = (
             und.join(labels, und.src == labels.vid)
             .groupBy(F.col("dst").alias("vid2"))
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = (
+        new_labels = _stage(
             labels.join(neighbor_min, labels.vid == neighbor_min.vid2, "left")
             .select(
                 "vid",
@@ -570,7 +549,6 @@ def neardup_clusters(
                     F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -792,7 +770,6 @@ def ppjoin_prefix_pairs(
     tau_num: int = 3,
     tau_den: int = 5,
     max_df: int | None = None,
-    materialize: str | None = "local",
 ) -> DataFrame:
     """Prefix-filtered set-similarity join (the PPJoin/AllPairs family,
     Chaudhuri et al. 2006 / Xiao et al. 2008 — public knowledge).
@@ -804,13 +781,11 @@ def ppjoin_prefix_pairs(
     explode→distinct subtree (the r13 before-plan shows
     documents.parquet scanned 6× with six Generate stages;
     ReuseExchange does NOT dedupe them because the subtrees differ in
-    pushed filters/projections). `materialize` stages both frames via
-    _stage — same strategy knob as minhash_lsh_pairs: 'local' for
-    single-node (default; recomputed inside every timed run — lineage
-    truncation, not cross-run caching), 'storage' for cluster-scale
-    postings, None for pure-lazy. Interleaved same-load A/B at sf0.1:
-    6-round min 1.997s (None) → 1.668s (staged), and every redundant
-    explode disappears from the plan.
+    pushed filters/projections). Both frames go through `_stage`
+    (recomputed inside every timed run — lineage truncation, not
+    cross-run caching). Interleaved same-load A/B at sf0.1: 6-round
+    min 1.997s (lazy) → 1.668s (staged), and every redundant explode
+    disappears from the plan.
 
     r14 re-confirmation (VERDICT r13 #2 — the driver's dirty r13 pass
     had contradicted the builder A/B): two more 32-core interleaved
@@ -877,7 +852,7 @@ def ppjoin_prefix_pairs(
     All-integer threshold: tau_den·c ≥ tau_num·(na+nb−c); returned
     jacc_e6 = (1e6·c) div (na+nb−c).
     """
-    posts = _stage(shingle_postings(df, id_col, text_col, n), materialize)
+    posts = _stage(shingle_postings(df, id_col, text_col, n))
     dfreq = posts.groupBy("shingle").agg(F.count(F.lit(1)).alias("dfreq"))
     # prefix length: ns − ceil(τ·ns) + 1, all-integer ceil
     plen = (
@@ -894,7 +869,7 @@ def ppjoin_prefix_pairs(
     prefix = ranked.filter(F.col("rk") <= plen)
     if max_df is not None:
         prefix = prefix.filter(F.col("dfreq") <= max_df)
-    prefix = _stage(prefix.select("id", "ns", "shingle"), materialize)
+    prefix = _stage(prefix.select("id", "ns", "shingle"))
     pa = prefix.select(
         F.col("id").alias("id_a"), F.col("ns").alias("na"), "shingle"
     )

@@ -778,7 +778,6 @@ def _two_level_quantize(
     vec_col: str,
     n_cells: int,
     seed: int,
-    materialize: str | None = "local",
 ) -> tuple[DataFrame, DataFrame, np.ndarray]:
     """Shared two-level quantizer pipeline: returns (fine, subcents,
     coarse) where `fine` = every corpus vector with its (coarse,
@@ -788,8 +787,8 @@ def _two_level_quantize(
     driver-side object). Used by the inline form (knn_ivf_two_level)
     and the persisted build (build_ivf_two_level_index).
 
-    `materialize` stages the coarse-assigned corpus (the dedup._stage
-    strategies): the assigned table feeds THREE separate subtrees
+    The coarse-assigned corpus is staged via dedup._stage: the
+    assigned table feeds THREE separate subtrees
     (fine's left side, the sub-centroid window, the probe join) and
     ReuseExchange does NOT dedupe them (different downstream
     Exchanges), so lazy lineage re-runs the corpus-wide Arrow kernel
@@ -821,8 +820,7 @@ def _two_level_quantize(
         cq.withColumn(
             "coarse",
             F.element_at(_int_argsort_cells_udf(coarse, 1)("vq"), 1),
-        ),
-        materialize,
+        )
     )
     # sub-centroid table: per coarse cell, first n_sub members in
     # md5(id:seed:sub) order — distributed, never collected

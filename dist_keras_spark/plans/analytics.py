@@ -120,11 +120,7 @@ FROM spine s LEFT JOIN hourly h
   ON s.hour = h.hour AND s.event_type = h.event_type
 """,
 )
-def events_hourly_gapfill(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: str | None = "local",
-) -> DataFrame:
+def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series resample + gap-fill (the hypertable `time_bucket_gapfill`
     / `locf` shape): a dense hour × event_type spine, hourly aggregates
     left-joined on, missing hours carried forward with
@@ -145,14 +141,13 @@ def events_hourly_gapfill(
     monotonic (min/max of truncated hours == truncated min/max ts),
     and every event lands in a group so DISTINCT event_type over the
     aggregate equals DISTINCT over events. Final plan: events scans
-    3→1 (`materialize` knob, default 'local'); oracle unchanged and
-    hash-green at 3 SFs."""
+    3→1 (staged via `_stage`); oracle unchanged and hash-green at
+    3 SFs."""
     e = _lt(spark, sf_dir, "events")
     hourly = _stage(
         e.groupBy(
             F.date_trunc("hour", "ts").alias("hour"), "event_type"
-        ).agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv")),
-        materialize,
+        ).agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
     )
     bounds = hourly.agg(
         F.min("hour").alias("lo"), F.max("hour").alias("hi")
@@ -1529,15 +1524,17 @@ def gini_histogram_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.4/§5): the per-customer cents aggregate used to be
     # planned THREE times (max-h branch, n/m-totals branch, binning
     # branch — 3 orders scans + 3 custkey exchanges; AQE measurably
-    # does not reuse the duplicated stages). localCheckpoint pins it
-    # once — executor-resident, ~customer-count rows (two longs each,
-    # 100× smaller than orders), the same lineage-truncation pattern
-    # minhash_lsh_pairs stages — and ONE combined stats aggregate
-    # (h, n, m) replaces the two separate global-agg branches.
+    # does not reuse the duplicated stages). `_stage` pins it once —
+    # ~customer-count rows (two longs each, 100× smaller than orders),
+    # the same lineage-truncation pattern minhash_lsh_pairs stages —
+    # and ONE combined stats aggregate (h, n, m) replaces the two
+    # separate global-agg branches.
     # Same-session A/B at sf0.1: 0.78s → 0.62s min-of-5.
-    spend = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
-    ).localCheckpoint(eager=True)
+    spend = _stage(
+        o.groupBy("o_custkey").agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+        )
+    )
     stats = spend.agg(
         F.max("cents").alias("h"),
         F.count(F.lit(1)).alias("n"),
@@ -1852,11 +1849,7 @@ SELECT CAST(day AS DATE) AS day, CAST(sum(o) AS BIGINT) AS n_events,
 FROM cells GROUP BY day
 """,
 )
-def drift_chi2_daily(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: str | None = "local",
-) -> DataFrame:
+def drift_chi2_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift monitor: per-day χ² statistic of the
     event-type mix against the whole-corpus mix — the standard
     data-quality alarm for 'today's traffic looks different'. Expected
@@ -1875,14 +1868,13 @@ def drift_chi2_daily(
     subtrees are not byte-identical and runtime ReusedExchange never
     fires — the final plan re-ran the full events scan + aggregate
     6×. `daily` (days × 5 types rows, three narrow columns) is now
-    staged once via the `materialize` knob; final plan 6→1 events
+    staged once via `_stage`; final plan 6→1 events
     scans. Oracle hash-green at 3 SFs."""
     e = _lt(spark, sf_dir, "events")
     daily = _stage(
         e.groupBy(
             F.date_trunc("day", "ts").alias("day"), "event_type"
-        ).agg(F.count(F.lit(1)).alias("o")),
-        materialize,
+        ).agg(F.count(F.lit(1)).alias("o"))
     )
     days = daily.select("day").distinct()
     types = daily.select("event_type").distinct()

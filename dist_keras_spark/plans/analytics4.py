@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dist_keras_spark.operators.dedup import _stage
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.sources.tables import load_table as _lt
 
@@ -619,8 +620,9 @@ def bloom_runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Materialize UNDER the lowered thresholds (plan is frozen at
         # action time; restoring confs first would re-plan without the
-        # bloom filter on some Spark versions).
-        out = out.localCheckpoint(eager=True)
+        # bloom filter on some Spark versions). `_stage` is eager in
+        # both of its branches, so the plan is frozen here either way.
+        out = _stage(out)
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)

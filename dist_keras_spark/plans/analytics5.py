@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from dist_keras_spark.functions.arrays import (
     cosine_similarity as _cosine_similarity,
 )
-from dist_keras_spark.operators.dedup import substring_dup_pairs
+from dist_keras_spark.operators.dedup import _stage, substring_dup_pairs
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.operators.dedup import spread as _spread
 from dist_keras_spark.operators.similarity import topk_scored
@@ -1763,7 +1763,6 @@ def _scaled_ivf_candidates(
     emb: DataFrame,
     n_probe: int = 8,
     seed: int = 42,
-    materialize: str | None = "local",
 ) -> DataFrame:
     """The scaled-cells IVF candidate stage shared by
     ivf_pq_scaled_top5 and rrf_fusion_scaled_top5 — knn_ivf_scaled's
@@ -1789,7 +1788,7 @@ def _scaled_ivf_candidates(
     on cell past that; candidates, not the corpus, are what moves
     either way.
 
-    `materialize` (r13, guide §2.4): the two cell-assignment frames are
+    Staging (r13, guide §2.4): the two cell-assignment frames are
     staged through dedup._stage before the probe join — every consumer
     of this helper feeds the candidate frame to MULTIPLE scoring arms
     (rrf exact+PQ, pq_recall served+PQ, mrl full+truncated), and the
@@ -1798,9 +1797,7 @@ def _scaled_ivf_candidates(
     differ, defeating exchange reuse — the ppjoin/gini waste class).
     Staging runs the Arrow kernel + corpus scan ONCE per frame;
     recomputed inside every timed run (lineage truncation, not
-    caching). 'local' default for single-node; 'storage' for cluster
-    scale; None restores pure-lazy lineage when staging exceeds block
-    storage."""
+    caching)."""
     import numpy as np
 
     from dist_keras_spark.operators.similarity import (
@@ -1813,8 +1810,6 @@ def _scaled_ivf_candidates(
     cents = cents / np.maximum(
         np.linalg.norm(cents, axis=1, keepdims=True), 1e-12
     )
-    from dist_keras_spark.operators.dedup import _stage
-
     c = _stage(
         emb.select(
             F.col("vec_id").alias("neighbor_id"),
@@ -1822,8 +1817,7 @@ def _scaled_ivf_candidates(
             F.element_at(_cell_assign_udf(cents, 1)("embedding"), 1).alias(
                 "cell"
             ),
-        ),
-        materialize,
+        )
     )
     q = _stage(
         emb.filter(F.col("vec_id") % 20 == 0).select(
@@ -1832,8 +1826,7 @@ def _scaled_ivf_candidates(
             F.explode(_cell_assign_udf(cents, n_probe)("embedding")).alias(
                 "cell"
             ),
-        ),
-        materialize,
+        )
     )
     return (
         c.join(q, "cell")

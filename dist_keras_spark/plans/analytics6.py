@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.arrays import int8_quantize
+from dist_keras_spark.operators.dedup import _stage
 from dist_keras_spark.plans.registry import ORACLE, query
 from dist_keras_spark.sources.tables import load_table as _lt
 
@@ -593,15 +595,7 @@ def semdedup_cell_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # spread() first (r10): quantize/assignment folds are interpreted
     e = spread(_lt(spark, sf_dir, "embeddings"), "vec_id")
-    scale = F.lit(127.0) / F.array_max(
-        F.transform("embedding", lambda y: F.abs(y.cast("double")))
-    )
-    q8 = e.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * scale).cast("long")
-        ).alias("v"),
-    )
+    q8 = e.select("vec_id", int8_quantize("embedding").alias("v"))
     n = q8.select(
         "vec_id",
         "v",
@@ -714,11 +708,7 @@ _SCALED_CELLS_SQL = "greatest(16, (SELECT count(*) // 100 FROM embeddings))"
     "semdedup_scaled_cells",
     oracle=_semdedup_oracle_sql(n_cells=_SCALED_CELLS_SQL),
 )
-def semdedup_scaled_cells(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: str | None = "local",
-) -> DataFrame:
+def semdedup_scaled_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-safe twin of semdedup_cell_prune (VERDICT r10 #1b): the
     paper's k ∝ N cluster count — n_cells = max(16, N div 100) — so
     per-cell membership stays ~100 rows as the corpus grows and the
@@ -749,15 +739,7 @@ def semdedup_scaled_cells(
 
     e = spread(_lt(spark, sf_dir, "embeddings"), "vec_id")
     n_cells = max(16, e.count() // 100)
-    scale = F.lit(127.0) / F.array_max(
-        F.transform("embedding", lambda y: F.abs(y.cast("double")))
-    )
-    q8 = e.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * scale).cast("long")
-        ).alias("v"),
-    )
+    q8 = e.select("vec_id", int8_quantize("embedding").alias("v"))
     import numpy as np
 
     cent_rows = (
@@ -785,14 +767,7 @@ def semdedup_scaled_cells(
     # r13 (guide §2.4): same three-consumer shape as
     # semdedup_cell_prune — stage the Arrow-assigned frame once so the
     # int matmul kernel + corpus scan run once, not three times.
-    # r14 (VERDICT r13 #3): strategy via the `materialize` knob
-    # ('local' single-node default / 'storage' cluster / None lazy),
-    # not a hard-coded 'local'.
-    from dist_keras_spark.operators.dedup import _stage
-
-    assign = _stage(
-        n.withColumn("cell", int_argmax_cell_udf(cents)("v")), materialize
-    )
+    assign = _stage(n.withColumn("cell", int_argmax_cell_udf(cents)("v")))
     # pair stage: identical to semdedup_cell_prune's — one cell-keyed
     # shuffle, integer cross-multiplied threshold, keep-first greedy
     a = assign.select(
@@ -1447,9 +1422,8 @@ def label_propagation_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the brand-basket self-join above is the expensive part and four
     # downstream frames reference it (2 rounds + degrees + vertices) —
-    # stage the dim-sized edge list once (the neardup_clusters
-    # convention; checkpoint() to reliable storage at cluster scale)
-    edges = edges.localCheckpoint(eager=True)
+    # stage the dim-sized edge list once (the neardup_clusters convention)
+    edges = _stage(edges)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")
     )
@@ -2267,7 +2241,7 @@ def kcore_peel_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this edge list (d0/e1/d1/e2/d2 + final join) — stage it once
     # (measured ~2x at sf0.1; see bench_extended_trace); peeled edge
     # lists shrink, so later rounds reuse the staged frame
-    edges = edges.localCheckpoint(eager=True)
+    edges = _stage(edges)
 
     def degrees(e: DataFrame) -> DataFrame:
         return e.groupBy(F.col("src").alias("node")).agg(
@@ -2973,11 +2947,7 @@ WHERE r.fold = 1
 GROUP BY f.n_cal, f.slope_micro, f.intercept_micro, q.q_hat_micro
 """,
 )
-def conformal_interval_coverage(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: str | None = "local",
-) -> DataFrame:
+def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-conformal prediction interval (Vovk et al. / Lei et al.,
     public knowledge) measured end-to-end: fit pooled OLS
     (quantity → price/100, the ols_slope_per_supplier fixed-point
@@ -3035,11 +3005,8 @@ def conformal_interval_coverage(
     # arm and the test arm — three consumers with differing pushed
     # filters (4 lineitem scans, zero ReusedExchange, the per-row md5
     # fold computed three times).  Stage the 4-long-columns frame once
-    # per run (lineage truncation, not caching). r14: strategy via the
-    # `materialize` knob (local/storage/None), not hard-coded.
-    from dist_keras_spark.operators.dedup import _stage
-
-    d = _stage(d, materialize)
+    # per run (lineage truncation, not caching).
+    d = _stage(d)
     cal = d.filter(F.col("fold") == 0)
     fit = cal.agg(
         F.count(F.lit(1)).alias("n_cal"),

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.arrays import int8_quantize
 from dist_keras_spark.functions.text import (
     doc_fingerprint,
     lang_id_heuristic,
@@ -23,6 +24,7 @@ from dist_keras_spark.functions.text import (
     tokens,
 )
 from dist_keras_spark.operators.dedup import (
+    _stage,
     exact_dedup,
     jaccard_pairs,
     minhash_lsh_pairs,
@@ -1684,21 +1686,7 @@ def knn_int8_quantized_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-candidate paths (pq_adc re-rank, ivf probes), not
     corpus×query scans."""
     e = _lt(spark, sf_dir, "embeddings")
-    scale = F.lit(127.0) / F.array_max(
-        F.transform("embedding", lambda y: F.abs(y.cast("double")))
-    )
-    # Spark's round (HALF_UP, as DuckDB's) quantizes; numpy's rounds
-    # half to even, so quantization stays a Spark expression. The scale
-    # rides in as a repeated array: referenced inside the lambda, it
-    # would be recomputed for every element (3x the sf1 time).
-    q8 = e.select(
-        "vec_id",
-        F.zip_with(
-            "embedding",
-            F.array_repeat(scale, F.size("embedding")),
-            lambda x, s: F.round(x.cast("double") * s).cast("long"),
-        ).alias("v"),
-    )
+    q8 = e.select("vec_id", int8_quantize("embedding").alias("v"))
     queries = q8.filter(F.col("vec_id") % 20 == 0)
     out = topk_scored(q8, queries, "dot", "vec_id", "v", k=5)
     return out.select(
@@ -2398,11 +2386,7 @@ def ivf_centroid_occupancy_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("ivf_refresh_migration", oracle=_ivf_incr_oracle_sql("refresh"))
-def ivf_refresh_migration(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: str | None = "local",
-) -> DataFrame:
+def ivf_refresh_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INDEX FRESHNESS, the refresh leg (r12) — closing the loop the
     drift metric opens: ONE exact Lloyd step over the frozen
     base-trained assignment, emitting the CELL MIGRATION MATRIX
@@ -2469,16 +2453,13 @@ def ivf_refresh_migration(
     # differ, so both subtrees re-executed (4 embeddings scans, zero
     # ReusedExchange).  Stage each once per run (lineage truncation,
     # not caching; the ppjoin/gini convention).
-    from dist_keras_spark.operators.dedup import _stage
-
     before = _stage(
         e.select(
             "vec_id",
             F.element_at(_cell_assign_udf(cents, 1)("embedding"), 1)
             .cast("int")
             .alias("cell"),
-        ),
-        materialize,
+        )
     )
     q = _stage(
         e.select(
@@ -2487,8 +2468,7 @@ def ivf_refresh_migration(
                 "embedding",
                 lambda x: F.round(x.cast("double") * 1000).cast("long"),
             ).alias("vq"),
-        ),
-        materialize,
+        )
     )
     per_dim = (
         before.join(q, "vec_id")
@@ -2533,11 +2513,7 @@ def ivf_refresh_migration(
     "ivf_refresh_budgeted",
     oracle=_ivf_incr_oracle_sql("refresh_budgeted"),
 )
-def ivf_refresh_budgeted(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: str | None = "local",
-) -> DataFrame:
+def ivf_refresh_budgeted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCALE-SAFE twin of ivf_refresh_migration (r12): refresh a
     BUDGET of B = 4 cells per maintenance pass — the ones that
     ingested the most delta mass (n_delta desc, cell asc; the signal
@@ -2583,8 +2559,6 @@ def ivf_refresh_budgeted(
     # scans, zero ReusedExchange).  Stage it (ids+cell only — no
     # vectors) and the quantized frame once per run (lineage
     # truncation, not caching).
-    from dist_keras_spark.operators.dedup import _stage
-
     before_all = _stage(
         e.select(
             "vec_id",
@@ -2592,8 +2566,7 @@ def ivf_refresh_budgeted(
             F.element_at(_cell_assign_udf(cents, 1)("embedding"), 1)
             .cast("int")
             .alias("cell"),
-        ),
-        materialize,
+        )
     )
     hot = (
         before_all.groupBy("cell")
@@ -2614,8 +2587,7 @@ def ivf_refresh_budgeted(
                 "embedding",
                 lambda x: F.round(x.cast("double") * 1000).cast("long"),
             ).alias("vq"),
-        ),
-        materialize,
+        )
     )
     region = q.join(before.select("vec_id"), "vec_id")
     per_dim = (
@@ -2711,11 +2683,7 @@ GROUP BY a2.cid
 
 
 @query("kmeans_lloyd_two_iters", oracle=_kmeans_oracle_sql())
-def kmeans_lloyd_two_iters(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: str | None = "local",
-) -> DataFrame:
+def kmeans_lloyd_two_iters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means (Lloyd's algorithm), two iterations, EXACTLY replayed by
     the SQL oracle — the iterative-ML pattern with a hash-checkable
     result. The trick making a float-centroid algorithm cross-engine
@@ -2748,13 +2716,10 @@ def kmeans_lloyd_two_iters(
     update join, the final membership join) — the fixed final-plan
     audit read 5 embeddings scans, zero ReusedExchange, the per-row
     quantize transform re-run each time. `q` is staged once per run
-    through `_stage` (`materialize` knob: 'local' single-node,
-    'storage' cluster scale, None fully lazy); the per-iteration
-    re-assignment stays lazy — it IS the declared computation.
+    through `_stage`; the per-iteration re-assignment stays lazy — it
+    IS the declared computation.
     Interleaved A/B at sf0.1: 1.575 → 1.334s min (staged won 5/5
     alternated rounds); oracle hash-green at 3 SFs."""
-    from dist_keras_spark.operators.dedup import _stage
-
     k, dim = 8, 64
     e = _lt(spark, sf_dir, "embeddings")
     q = _stage(
@@ -2764,8 +2729,7 @@ def kmeans_lloyd_two_iters(
                 "embedding",
                 lambda x: F.round(x.cast("double") * 1000).cast("long"),
             ).alias("vq"),
-        ),
-        materialize,
+        )
     )
     init = (
         q.orderBy("vec_id")

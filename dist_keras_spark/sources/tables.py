@@ -34,17 +34,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Tables that are safe to ALWAYS broadcast: only the SF-invariant dims
-# (region 5 rows, nation 25). Everything else — supplier (SF·10k),
-# customer (SF·150k), part (SF·200k) — scales linearly with SF: at
-# 100 TB lineitem (≈ SF 1e5) supplier alone is ~1e9 rows / hundreds of
-# GB, so a broadcast hint OOMs. AQE still broadcasts any of them at
-# runtime when the observed size fits — the hint would only remove
-# that safety net.
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Session confs that change what parquet schema inference returns.
 _INFERENCE_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",

@@ -19,3 +19,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """Factory: calling it sets `tmp_path/"ckpt"` as the shared session's
+    checkpoint dir (so `_stage` takes the reliable-checkpoint branch)
+    and returns that path. Teardown clears the dir again; otherwise the
+    session-scoped `spark` fixture would carry it into every later test
+    and silently switch their staging to reliable checkpoints."""
+    sc = spark.sparkContext
+    path = tmp_path / "ckpt"
+
+    def enable():
+        sc.setCheckpointDir(str(path))
+        return path
+
+    yield enable
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None

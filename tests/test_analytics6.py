@@ -855,26 +855,21 @@ def test_semdedup_scaled_cells_grows_k_with_corpus(spark):
     assert out["cell"].nunique() > 16
 
 
-def test_materialize_storage_mode_staged_queries(spark, sf_dir, tmp_path):
+def test_materialize_storage_mode_staged_queries(spark, sf_dir, checkpoint_dir):
     """VERDICT r13 #3: the staged query plans must run the documented
-    100 TB path ('storage' = reliable checkpoint to the session's
-    checkpoint dir) as executed code, not a docstring — and produce
-    the identical result. One representative per touched file:
-    conformal_interval_coverage (analytics6) and
-    kmeans_lloyd_two_iters (llm); r14 adds drift_chi2_daily
-    (analytics — the 6→1 events-scan staging)."""
+    100 TB path (a reliable checkpoint to the session's checkpoint dir,
+    taken by `_stage` whenever one is set) as executed code, not a
+    docstring — and produce the identical result. One representative
+    per touched file: conformal_interval_coverage (analytics6),
+    kmeans_lloyd_two_iters (llm) and drift_chi2_daily (analytics — the
+    6→1 events-scan staging)."""
     from dist_keras_spark.plans.analytics import drift_chi2_daily
     from dist_keras_spark.plans.analytics6 import conformal_interval_coverage
     from dist_keras_spark.plans.llm import kmeans_lloyd_two_iters
 
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    for fn in (
-        conformal_interval_coverage,
-        kmeans_lloyd_two_iters,
-        drift_chi2_daily,
-    ):
-        local = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        stored = sorted(
-            map(tuple, fn(spark, sf_dir, materialize="storage").collect())
-        )
-        assert stored == local, fn.__name__
+    fns = (conformal_interval_coverage, kmeans_lloyd_two_iters, drift_chi2_daily)
+    local = [sorted(map(tuple, fn(spark, sf_dir).collect())) for fn in fns]
+    ckpt = checkpoint_dir()
+    for fn, want in zip(fns, local):
+        assert sorted(map(tuple, fn(spark, sf_dir).collect())) == want, fn.__name__
+    assert any(p.is_file() for p in ckpt.rglob("*"))

@@ -74,23 +74,6 @@ def test_minhash_lsh_recall_is_total_on_fixture(spark, sf_dir):
     assert lsh == exact
 
 
-def test_minhash_lsh_runs_without_materialization(spark, sf_dir):
-    """materialize=None keeps the whole plan lazy (no localCheckpoint —
-    the 100 TB posture where signatures must not pin executor storage)
-    and must yield the identical pair set."""
-    import pytest
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    eager = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(d, threshold=0.8).collect()}
-    lazy = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(d, threshold=0.8, materialize=None).collect()
-    }
-    assert lazy == eager
-    with pytest.raises(ValueError, match="materialize"):
-        minhash_lsh_pairs(d, materialize="bogus")
-
-
 def test_shingles_edges(spark):
     df = spark.createDataFrame([("a b c d",), ("a b",), ("a a a a",)], "text string")
     out = df.select(shingles(tokens("text"), 3).alias("s")).collect()
@@ -105,17 +88,16 @@ def test_fingerprint_is_order_sensitive(spark):
     assert fps[0] != fps[1]
 
 
-def test_minhash_lsh_storage_checkpoint(spark, sf_dir, tmp_path):
-    """materialize='storage' (reliable checkpoint dir — the 100 TB
-    cluster path) must produce the identical pair set."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+def test_minhash_lsh_storage_checkpoint(spark, sf_dir, checkpoint_dir):
+    """With a checkpoint dir set (the 100 TB cluster path) `_stage`
+    writes reliable checkpoints there, and the pair set is identical to
+    the local-checkpoint run."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     local = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(d, threshold=0.8).collect()}
-    stored = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(d, threshold=0.8, materialize="storage").collect()
-    }
+    ckpt = checkpoint_dir()
+    stored = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(d, threshold=0.8).collect()}
     assert stored == local
+    assert any(p.is_file() for p in ckpt.rglob("*"))
 
 
 def test_band_fold_hash_properties():

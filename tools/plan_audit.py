@@ -196,7 +196,7 @@ AUDITED = {
     "fk_orphan_audit": "each relationship = one left-anti hash join + count, parent side broadcast while it fits; four audits independent, one-row unions",
     "rake_keyword_scores": "posexplode + ONE doc-keyed running-sum window for phrase ids; two map-side-combined aggs; top-20 is TakeOrderedAndProject",
     "lorenz_curve_deciles": "per-customer rollup partial-aggregates; ordered window on the population-sized rollup under bounded_window_key (exact baseline; gini_histogram_binned is the 100 TB path)",
-    "kcore_peel_two_rounds": "per round: degree agg + two left-semi edge filters; edge list monotonically shrinks, checkpoint between rounds at scale",
+    "kcore_peel_two_rounds": "per round: degree agg + two left-semi edge filters; edge list staged once (_stage) and monotonically shrinks",
     "minhash_estimate_error": "k=16 portable signatures as array_min(transform) column math (small codegen class); exact side reuses the inverted index; everything integer",
     "minhash_estimate_error_rootn": "md5-bucket sqrtN stratum filters the scan BEFORE signatures and the inverted-index truth join - pair term Theta(K^2*N); schedule one count + scan-side filter; measured 10x 0.11 / sf1-sf2 -0.02 vs baseline 2.49",
     "knn_ivf_hier_top5": "two-level quantizer: driver holds only ceil(sqrt(cells)) coarse centroids (Arrow int64 kernel); sub-centroid table stays a DataFrame; fine assign = bounded n_sub fan-out join + vec-keyed window argmin - Theta(N*sqrt(cells)) assignment, no cells-sized collect anywhere",
@@ -225,7 +225,7 @@ AUDITED = {
     "packing_fragmentation_rate": "ONE lang-keyed exchange: running-sum window, then the groupBy REUSES the window's hash partitioning (agg adds no exchange)",
     "incremental_dedup_dfcap": "same asymmetric batch-probes-corpus shape as the baseline, probe join input bounded at df<=64 corpus postings per shingle (one count on the maintained index); pairs/shingle constant past vocab saturation",
     "unigram_surprisal_quality": "vocab dim built by one word-keyed map-side-combined agg, 1-row total crossJoined broadcast, dim BROADCAST back onto the exploded scan (no second word shuffle); doc_id agg then dim-sized source agg — all data-sized sums exact int64 micro-nats",
-    "neardup_cluster_lsh": "scale-safe cluster twin: MinHash band buckets (signature space never saturates, sf1->sf2 exp 0.56 for the pair step) feed the same min-label propagation; edges localCheckpoint'd once, one id-keyed shuffle-join per round",
+    "neardup_cluster_lsh": "scale-safe cluster twin: MinHash band buckets (signature space never saturates, sf1->sf2 exp 0.56 for the pair step) feed the same min-label propagation; edges staged once (_stage), one id-keyed shuffle-join per round",
     "dedup_embedding_scaled_planes": "scale-safe dedup twin: k = min{k>=8 : 64*2^k >= N} band bits from a FIXED 16x20 plane layout — bucket space grows with N so in-bucket pairs/vector stay constant; ids-only band shuffle, vectors rejoined by id for the exact-cosine verify",
     "knn_ivf_scaled_top5": "scale-safe ANN twin: quantizer cells = max(16, N div 1000) with n_probe fixed at 8 — per-query candidate work constant (~8000 vectors); same md5-sampled centroid broadcast + cell-keyed candidate join as the pinned baseline",
     "cluster_cap_sample_lsh": "scale-safe cap twin: identical doc_id join + cluster-keyed window epilogue over neardup_cluster_lsh's band-bucket clusters — the quadratic exact-postings candidate stage swapped out, nothing else changes",
