@@ -1,4 +1,5 @@
-"""Column-expression helpers (arrays, text, hashing) — all JVM built-ins."""
+"""Column-expression helpers (arrays, text, hashing, event time) — all JVM
+built-ins."""
 
 from dist_keras_spark.functions.arrays import cosine_similarity, dot, l2_norm
 from dist_keras_spark.functions.text import (

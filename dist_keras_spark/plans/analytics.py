@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.time import epoch_s, epoch_us, trunc
 from dist_keras_spark.operators.dedup import _stage
 from dist_keras_spark.operators.utils import bounded_window_key
 from dist_keras_spark.plans.registry import query
@@ -146,7 +147,7 @@ def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _lt(spark, sf_dir, "events")
     hourly = _stage(
         e.groupBy(
-            F.date_trunc("hour", "ts").alias("hour"), "event_type"
+            trunc("hour", "ts").alias("hour"), "event_type"
         ).agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
     )
     bounds = hourly.agg(
@@ -246,7 +247,7 @@ def events_anomaly_trailing_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     day boundary reset is the standard trade for unbounded streams."""
     e = _lt(spark, sf_dir, "events")
     w = (
-        W.partitionBy("event_type", F.date_trunc("day", "ts"))
+        W.partitionBy("event_type", F.to_date("ts"))
         .orderBy("ts", "event_id")
         .rowsBetween(-20, -1)
     )
@@ -479,12 +480,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select(
         "click_id",
         "purchase_id",
-        # NTZ → TIMESTAMP (UTC session: wall-clock identity) → epoch
-        # seconds; a direct NTZ→BIGINT cast is rejected by Spark.
-        (
-            F.col("p_ts").cast("timestamp").cast("long")
-            - F.col("ts").cast("timestamp").cast("long")
-        ).alias("gap_sec"),
+        (epoch_s("p_ts") - epoch_s("ts")).alias("gap_sec"),
     )
 
 
@@ -801,7 +797,7 @@ def events_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _lt(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+        epoch_us("ts").alias("us"),
     )
     wlag = W.partitionBy("user_id").orderBy("us", "event_id")
     flagged = e.select(
@@ -937,7 +933,7 @@ def regression_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed regression, and exactly how you'd sweep millions of
     per-key trends at 100 TB."""
     e = _lt(spark, sf_dir, "events")
-    x = (F.col("ts").cast("timestamp").cast("long") / 3600.0).alias("x")
+    x = (epoch_s("ts") / 3600.0).alias("x")
     pts = e.select("event_type", x, F.col("value").alias("y"))
     return pts.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1225,25 +1221,9 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     visible to <= and >=), backward ties pick the smallest id via the
     negated-id asc / last() pair, forward via id desc / last().
 
-    r14 (ADVICE r13): the struct used to carry p_ts as timestamp_ntz
-    and the gap math round-tripped it through cast('timestamp') —
-    lossless only because the session pins UTC (a non-UTC session
-    would skew gaps silently on the NTZ fixture branch). The struct
-    now carries unix MICROS as a plain long, derived once per row
-    with a timezone-free expression per ts dtype: timestampdiff from
-    the NTZ epoch when ts reads as TIMESTAMP_NTZ (pure wall-clock
-    arithmetic), unix_micros directly when ts is TIMESTAMP (the
-    ns-bigint fixture branch — instant-based, no cast)."""
+    The struct carries the purchase time as epoch µs (a plain long),
+    derived once per row."""
     e = _lt(spark, sf_dir, "events")
-    if dict(e.dtypes).get("ts") == "timestamp_ntz":
-        def us_of(col: str) -> F.Column:
-            return F.expr(
-                "timestampdiff(MICROSECOND, "
-                f"CAST('1970-01-01 00:00:00' AS TIMESTAMP_NTZ), {col})"
-            )
-    else:
-        def us_of(col: str) -> F.Column:
-            return F.unix_micros(F.col(col))
     rv_t = "struct<purchase_id:bigint,p_us:bigint>"
     clicks = e.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("__k"),
@@ -1260,7 +1240,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("long").alias("click_id"),
         F.struct(
             F.col("event_id").alias("purchase_id"),
-            us_of("ts").alias("p_us"),
+            epoch_us("ts").alias("p_us"),
         ).cast(rv_t).alias("__rv"),
         F.col("event_id").alias("__tb"),
     )
@@ -1286,7 +1266,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("__is_left") == 1)
     )
-    t_us = us_of("__t")
+    t_us = epoch_us("__t")
     gap_b = t_us - F.col("__b.p_us")  # >= 0 when backward match exists
     gap_f = F.col("__f.p_us") - t_us  # >= 0 when forward match exists
     pick_backward = F.col("__b").isNotNull() & (
@@ -1873,7 +1853,7 @@ def drift_chi2_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _lt(spark, sf_dir, "events")
     daily = _stage(
         e.groupBy(
-            F.date_trunc("day", "ts").alias("day"), "event_type"
+            trunc("day", "ts").alias("day"), "event_type"
         ).agg(F.count(F.lit(1)).alias("o"))
     )
     days = daily.select("day").distinct()
@@ -1938,10 +1918,9 @@ def win_reset_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, event_id) — identical float sequences in both engines."""
     e = _lt(spark, sf_dir, "events")
     w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
-    # µs-exact gap (NTZ→TIMESTAMP→unix_micros; a seconds cast would
-    # truncate 1800.5s to 1800 and flip the boundary vs the oracle's
-    # INTERVAL comparison)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    # µs-exact gap (seconds would truncate 1800.5s to 1800 and flip the
+    # boundary vs the oracle's INTERVAL comparison)
+    us = epoch_us("ts")
     gap_ok = (us - F.lag(us).over(w_user)) <= 1800 * 1_000_000
     flagged = e.select(
         "event_id",
@@ -2016,12 +1995,11 @@ def attribution_linear_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("pts"),
         "value",
     )
-    us = lambda col: F.unix_micros(F.col(col).cast("timestamp"))
     touches = (
         c.join(p, "user_id")
         .filter(
             (F.col("cts") <= F.col("pts"))
-            & (us("pts") - us("cts") <= 7 * 86400 * 1_000_000)
+            & (epoch_us("pts") - epoch_us("cts") <= 7 * 86400 * 1_000_000)
         )
         .withColumn(
             "n_touch", F.count(F.lit(1)).over(W.partitionBy("purchase_id"))

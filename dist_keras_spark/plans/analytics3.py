@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.time import trunc
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.sources.tables import load_table as _lt
 
@@ -159,7 +160,7 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(price·100) int cents; sums exact in int64."""
     o = _lt(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("long")
-    split = F.lit("1998-01-01").cast("timestamp")
+    split = F.lit("1998-01-01").cast("timestamp_ntz")
 
     def snap(pred):
         return (
@@ -450,7 +451,7 @@ def revenue_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy(
             "n_name",
-            F.date_trunc("month", "o_orderdate").cast("date").alias("month"),
+            trunc("month", "o_orderdate").cast("date").alias("month"),
         )
         .agg(
             F.sum(
@@ -1249,7 +1250,7 @@ def events_cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     only data-sized work is the two keyed scans."""
     e = _lt(spark, sf_dir, "events")
     first_seen = e.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
+        trunc("week", F.min("ts")).cast("date").alias("cohort_week")
     )
     spend = (
         e.filter(F.col("event_type") == "purchase")
@@ -1258,7 +1259,7 @@ def events_cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cohort_week",
             (
                 F.datediff(
-                    F.date_trunc("week", "ts").cast("date"), F.col("cohort_week")
+                    trunc("week", "ts").cast("date"), F.col("cohort_week")
                 )
                 / 7
             )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.time import epoch_s, from_epoch_us
 from dist_keras_spark.operators.dedup import _stage
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.sources.tables import load_table as _lt
@@ -443,34 +444,34 @@ def interpolate_linear_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     row. Final plan: 1 events scan, join gone, exchanges 4→2; oracle
     (which still declares the grid + left join) hash-green at 3 SFs."""
     e = _lt(spark, sf_dir, "events")
+    # The grid runs on hour starts as epoch seconds (longs); `h` is
+    # rebuilt as a wall clock only for the output.
+    sec = epoch_s("ts")
+    hour = F.lit(3600).cast("long")
     hourly = e.groupBy(
-        "user_id", F.date_trunc("hour", "ts").alias("h")
+        "user_id", (sec - F.pmod(sec, hour)).alias("hs")
     ).agg(F.floor(F.avg("value") * 100).cast("long").alias("cents"))
-    wl = W.partitionBy("user_id").orderBy("h")
+    wl = W.partitionBy("user_id").orderBy("hs")
     withnext = hourly.select(
-        "user_id", "h", "cents", F.lead("h").over(wl).alias("lead_h")
+        "user_id", "hs", "cents", F.lead("hs").over(wl).alias("lead_hs")
     )
     joined = withnext.select(
         "user_id",
         "cents",
-        F.col("h").alias("oh"),
+        F.col("hs").alias("ohs"),
         F.explode(
             F.sequence(
-                "h",
-                F.coalesce(
-                    F.expr("lead_h - INTERVAL 1 HOUR"), F.col("h")
-                ),
-                F.expr("INTERVAL 1 HOUR"),
+                "hs", F.coalesce(F.col("lead_hs") - hour, F.col("hs")), hour
             )
-        ).alias("h"),
+        ).alias("hs"),
     ).select(
         "user_id",
-        "h",
-        F.when(F.col("h") == F.col("oh"), F.col("cents")).alias("cents"),
+        "hs",
+        F.when(F.col("hs") == F.col("ohs"), F.col("cents")).alias("cents"),
     )
     wb = (
         W.partitionBy("user_id")
-        .orderBy("h")
+        .orderBy("hs")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     # "next" values via the REVERSED order with a running frame, not a
@@ -481,29 +482,28 @@ def interpolate_linear_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first/min over the forward suffix.
     wf = (
         W.partitionBy("user_id")
-        .orderBy(F.col("h").desc())
+        .orderBy(F.col("hs").desc())
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    obs_h = F.when(F.col("cents").isNotNull(), F.col("h"))
+    obs_s = F.when(F.col("cents").isNotNull(), F.col("hs"))
     bounded = joined.select(
         "user_id",
-        "h",
+        "hs",
         "cents",
         F.last("cents", ignorenulls=True).over(wb).alias("prev_c"),
-        F.max(obs_h).over(wb).alias("prev_h"),
+        F.max(obs_s).over(wb).alias("prev_s"),
         F.last("cents", ignorenulls=True).over(wf).alias("next_c"),
-        F.min(obs_h).over(wf).alias("next_h"),
+        F.min(obs_s).over(wf).alias("next_s"),
     )
-    sec = lambda c: F.col(c).cast("timestamp").cast("long")  # noqa: E731
     interp = F.col("prev_c") * 3600 + F.floor(
         (F.col("next_c") - F.col("prev_c"))
-        * (sec("h") - sec("prev_h"))
+        * (F.col("hs") - F.col("prev_s"))
         * 3600
-        / (sec("next_h") - sec("prev_h"))
+        / (F.col("next_s") - F.col("prev_s"))
     ).cast("long")
     return bounded.select(
         "user_id",
-        "h",
+        from_epoch_us(F.col("hs") * 1_000_000).alias("h"),
         F.when(F.col("cents").isNotNull(), F.col("cents") * 3600)
         .otherwise(interp)
         .alias("interp_num"),

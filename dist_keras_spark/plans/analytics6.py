@@ -25,6 +25,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from dist_keras_spark.functions.arrays import int8_quantize
+from dist_keras_spark.functions.time import as_wall
 from dist_keras_spark.operators.dedup import _stage
 from dist_keras_spark.plans.registry import ORACLE, query
 from dist_keras_spark.sources.tables import load_table as _lt
@@ -1847,9 +1848,7 @@ def streaming_enrich_then_window_live(
     The stateOperators assertion pins that exactly ONE stateful op
     exists (the rollup; a mis-planned stream-stream join would add
     join state)."""
-    import uuid
-
-    from dist_keras_spark.streaming.pipelines import stream_events
+    from dist_keras_spark.streaming.pipelines import run_available_now, stream_events
 
     ev = stream_events(spark, sf_dir)
     c = _lt(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -1862,23 +1861,15 @@ def streaming_enrich_then_window_live(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.floor(F.col("value") * 100).cast("long")).alias("cents"),
     )
-    name = "enr" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    res, q = run_available_now(agg, "complete")
     n_state_ops = max(
         (len(p["stateOperators"]) for p in q.recentProgress), default=0
     )
     assert n_state_ops == 1, (
         f"expected exactly the rollup state operator, saw {n_state_ops}"
     )
-    return spark.table(name).select(
-        F.col("w.start").alias("window_start"), "c_mktsegment", "n", "cents"
+    return res.select(
+        as_wall("w.start").alias("window_start"), "c_mktsegment", "n", "cents"
     )
 
 

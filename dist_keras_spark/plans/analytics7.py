@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.time import epoch_s
 from dist_keras_spark.plans.registry import ORACLE, query
 from dist_keras_spark.sources.tables import load_table as _lt
 
@@ -1479,9 +1480,7 @@ def sessionize_with_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         F.when(
-            F.unix_timestamp("ts")
-            - F.unix_timestamp(F.lag(F.col("ts")).over(wo))
-            <= 1800,
+            epoch_s("ts") - epoch_s(F.lag(F.col("ts")).over(wo)) <= 1800,
             F.lit(0),
         )
         .otherwise(F.lit(1))
@@ -1496,19 +1495,12 @@ def sessionize_with_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     capped = anchored.withColumn(
         "sub",
-        (
-            (
-                F.unix_timestamp("ts") - F.unix_timestamp("gap_start")
-            )
-            / F.lit(7200)
-        ).cast("long"),
+        ((epoch_s("ts") - epoch_s("gap_start")) / F.lit(7200)).cast("long"),
     )
     return capped.groupBy("user_id", "sid", "sub").agg(
         F.min("ts").alias("session_start"),
         F.count(F.lit(1)).alias("n"),
-        (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts")))
-        .cast("long")
-        .alias("span_s"),
+        (epoch_s(F.max("ts")) - epoch_s(F.min("ts"))).alias("span_s"),
     ).select("user_id", "session_start", "n", "span_s")
 
 
@@ -1915,7 +1907,7 @@ def streaming_capped_sessions_live(
     )
     from dist_keras_spark.streaming.stateful import capped_sessions
 
-    drained = run_available_now(
+    drained, _ = run_available_now(
         capped_sessions(stream_events(spark, sf_dir)), output_mode="update"
     )
     latest = F.row_number().over(

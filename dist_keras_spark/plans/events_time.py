@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.time import epoch_us, trunc
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.sources.tables import load_table as _lt
 
@@ -173,18 +174,16 @@ def events_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id (AQE still broadcasts it when it truly fits)."""
     e = _lt(spark, sf_dir, "events")
     first_day = e.groupBy("user_id").agg(
-        F.date_trunc("day", F.min("ts")).alias("cohort_day")
+        F.to_date(F.min("ts")).alias("cohort_day")
     )
     return (
         e.join(first_day, "user_id")
         .select(
-            F.col("cohort_day").cast("date").alias("cohort_day_d"),
-            F.datediff(F.date_trunc("day", "ts"), F.col("cohort_day")).cast("int").alias(
-                "day_offset"
-            ),
+            "cohort_day",
+            F.datediff(F.to_date("ts"), "cohort_day").alias("day_offset"),
             "user_id",
         )
-        .groupBy(F.col("cohort_day_d").alias("cohort_day"), "day_offset")
+        .groupBy("cohort_day", "day_offset")
         .agg(F.countDistinct("user_id").alias("active_users"))
     )
 
@@ -230,14 +229,14 @@ def events_sessionize_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets its user-local session NUMBER (new session when >30 min since
     the previous event), the assignment shape `session_window` can't
     produce (it aggregates; this labels rows for downstream joins).
-    Gap arithmetic runs on integer epoch-microseconds (unix_micros /
-    epoch_us) so both engines compare exactly. ONE shuffle on user_id;
+    Gap arithmetic runs on integer epoch-microseconds (epoch_us on
+    both sides) so both engines compare exactly. ONE shuffle on user_id;
     both windows share the same partitioning, so Catalyst plans a
     single Exchange + sort."""
     e = _lt(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+        epoch_us("ts").alias("us"),
     )
     w_ord = W.partitionBy("user_id").orderBy("us", "event_id")
     flagged = e.select(
@@ -290,10 +289,8 @@ def events_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_by stage). The µs offset is integer arithmetic on the shared
     timestamp in both engines."""
     e = _lt(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    day = F.date_trunc("day", "ts")
-    day_us = F.unix_micros(day.cast("timestamp"))
-    k = (us - day_us) * 1_000_000 + F.col("event_id")
+    day = trunc("day", "ts")
+    k = (epoch_us("ts") - epoch_us(day)) * 1_000_000 + F.col("event_id")
     return (
         e.select(day.cast("date").alias("day"), "value", k.alias("k"))
         .groupBy("day")
@@ -337,7 +334,7 @@ def events_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the weighted sums are products of identical numbers in both
     engines (6dp-rounded quotient)."""
     e = _lt(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = epoch_us("ts")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select(
         "user_id",

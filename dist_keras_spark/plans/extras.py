@@ -78,7 +78,7 @@ def stateful_user_totals_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dist_keras_spark.streaming.stateful import running_user_totals
 
     out = running_user_totals(stream_events(spark, sf_dir))
-    return run_available_now(out, output_mode="update")
+    return run_available_now(out, output_mode="update")[0]
 
 
 @query(
@@ -859,7 +859,7 @@ def custom_datasource_stream_live(spark: SparkSession, sf_dir: str) -> DataFrame
     stream = (
         spark.readStream.format("synthetic_events").option("rows", 2000).load()
     )
-    drained = run_available_now(stream, output_mode="append")
+    drained, _ = run_available_now(stream, output_mode="append")
     return drained.groupBy("kind").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("amount"), 2).alias("total"),
@@ -899,7 +899,7 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-additive sketches (HLL/quantiles) need mergeable state of
     their own, which D4's approx family provides."""
     e = _lt(spark, sf_dir, "events")
-    day = F.date_trunc("day", "ts").cast("date").alias("day")
+    day = F.to_date("ts").alias("day")
     cents = F.round(F.col("value") * 100).cast("long")
 
     def rollup(df: DataFrame) -> DataFrame:
@@ -1120,8 +1120,8 @@ def manifest_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.read.parquet(*keep)
         .filter(
-            (F.col("l_shipdate") >= F.lit(d1).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(d2).cast("timestamp"))
+            (F.col("l_shipdate") >= F.lit(d1).cast("timestamp_ntz"))
+            & (F.col("l_shipdate") < F.lit(d2).cast("timestamp_ntz"))
         )
         .select("l_orderkey", "l_linenumber", "l_shipdate", "price_cents")
     )

@@ -12,10 +12,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.time import as_wall, wall_lit
 from dist_keras_spark.operators.multimodal import attach_blob, fake_decode_features
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.sources.sinks import scratch_path
 from dist_keras_spark.sources.tables import load_table as _lt
+from dist_keras_spark.streaming.pipelines import (
+    current_state,
+    run_available_now,
+    run_foreach_batch_to_parquet,
+    run_foreach_batch_upsert,
+    stream_events,
+    stream_staged,
+    streaming_dedup,
+    streaming_interval_self_join,
+    streaming_session_agg,
+    streaming_session_dynamic_agg,
+    streaming_sliding_counts,
+    streaming_tumbling_counts,
+)
 
 
 @query(
@@ -57,14 +72,8 @@ def streaming_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     Trigger.AvailableNow into a memory sink. Because every event is
     replayed (availableNow) and output mode is complete, the result
     equals the batch aggregate — so the batch oracle applies."""
-    from dist_keras_spark.streaming.pipelines import (
-        run_available_now,
-        stream_events,
-        streaming_tumbling_counts,
-    )
-
     stream = streaming_tumbling_counts(stream_events(spark, sf_dir))
-    return run_available_now(stream, output_mode="complete")
+    return run_available_now(stream, output_mode="complete")[0]
 
 
 @query(
@@ -99,15 +108,9 @@ def streaming_session_window_live(spark: SparkSession, sf_dir: str) -> DataFrame
     watermark, so state is bounded by ACTIVE sessions, not history —
     the property that makes sessionization viable on an unbounded
     stream."""
-    from dist_keras_spark.streaming.pipelines import (
-        run_available_now,
-        stream_events,
-        streaming_session_agg,
-    )
-
     return run_available_now(
         streaming_session_agg(stream_events(spark, sf_dir)), "complete"
-    )
+    )[0]
 
 
 @query(
@@ -149,16 +152,10 @@ def streaming_session_dynamic_gap_live(
     still bounded by ACTIVE sessions because each open session's
     expiry is the max reach of its events, which the watermark
     eventually passes."""
-    from dist_keras_spark.streaming.pipelines import (
-        run_available_now,
-        stream_events,
-        streaming_session_dynamic_agg,
-    )
-
     return run_available_now(
         streaming_session_dynamic_agg(stream_events(spark, sf_dir)),
         "complete",
-    )
+    )[0]
 
 
 @query(
@@ -179,15 +176,9 @@ def streaming_sliding_window_live(spark: SparkSession, sf_dir: str) -> DataFrame
     plans and as actual Structured Streaming with the same oracle).
     Sliding state is (4 windows per event) x active keys, expired past
     the watermark."""
-    from dist_keras_spark.streaming.pipelines import (
-        run_available_now,
-        stream_events,
-        streaming_sliding_counts,
-    )
-
     return run_available_now(
         streaming_sliding_counts(stream_events(spark, sf_dir)), "complete"
-    )
+    )[0]
 
 
 @query(
@@ -205,15 +196,9 @@ def streaming_interval_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C9/K as REAL streaming: watermarked stream-stream self-join with
     time bounds (bounded join state); availableNow replay makes the
     batch range-join SQL its oracle."""
-    from dist_keras_spark.streaming.pipelines import (
-        run_available_now,
-        stream_events,
-        streaming_interval_self_join,
-    )
-
     return run_available_now(
         streaming_interval_self_join(stream_events(spark, sf_dir)), "append"
-    )
+    )[0]
 
 
 @query(
@@ -266,10 +251,6 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — availableNow replays every event exactly once, so the sink
     must hold the same multiset. ts excluded (ns-precision gotcha)."""
     import shutil
-    from dist_keras_spark.streaming.pipelines import (
-        run_foreach_batch_to_parquet,
-        stream_events,
-    )
 
     path = scratch_path(spark, "foreachbatch_sink")
     shutil.rmtree(path, ignore_errors=True)  # append-mode sink: start clean
@@ -310,15 +291,9 @@ def streaming_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the deduped availableNow replay must equal the full table — the
     oracle pins that the stream delivers every event EXACTLY once
     (duplicate or dropped deliveries both hash-mismatch)."""
-    from dist_keras_spark.streaming.pipelines import (
-        run_available_now,
-        stream_events,
-        streaming_dedup,
-    )
-
     return run_available_now(
         streaming_dedup(stream_events(spark, sf_dir)), output_mode="append"
-    ).select("event_id", "user_id", "event_type")
+    )[0].select("event_id", "user_id", "event_type")
 
 
 @query(
@@ -399,11 +374,6 @@ def streaming_upsert_sink_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     crashed merge leaves the previous version current."""
     import shutil
 
-    from dist_keras_spark.streaming.pipelines import (
-        current_state,
-        run_foreach_batch_upsert,
-    )
-
     e = _lt(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts"
     )
@@ -475,51 +445,28 @@ def streaming_watermark_late_drop_live(spark: SparkSession, sf_dir: str) -> Data
     µs noise), so `<` vs `≤` eviction semantics cannot flip the
     result.
 
-    Determinism: batch order is pinned by file name AND mtime
-    (FileStreamSource processes oldest-first); the watermark is final
-    after batch 0, so later flush batches cannot change the emitted
-    set. Scale: state is bounded by OPEN windows only — exactly what
-    the watermark is for at 100 TB/day ingest."""
+    Determinism: `stream_staged` pins the batch order; the watermark
+    is final after batch 0, so later flush batches cannot change the
+    emitted set. Scale: state is bounded by OPEN windows only —
+    exactly what the watermark is for at 100 TB/day ingest."""
     import datetime as dt
-    import glob
-    import os
-    import shutil
-    import uuid
 
     e = _lt(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
     mx = e.agg(F.max("ts")).first()[0]
-    old = F.col("ts") < F.lit(mx - dt.timedelta(hours=2))
+    old = F.col("ts") < wall_lit(mx - dt.timedelta(hours=2))
     straggler = (F.col("event_id") % 10 == 0) & old
     bridge = (F.col("event_id") % 10 == 5) & old
-    src = scratch_path(spark, "wm_late_src")
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src)
-
-    def stage(df, name: str, mtime: float) -> None:
-        tmp = scratch_path(spark, "wm_late_tmp_" + uuid.uuid4().hex[:8])
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(src, name)
-        shutil.move(part, dest)
-        os.utime(dest, (mtime, mtime))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    now = os.stat(src).st_mtime
-    stage(e.filter(~straggler & ~bridge), "a-batch0.parquet", now - 300)
-    stage(e.filter(bridge), "b-batch1.parquet", now - 200)
-    stage(e.filter(straggler), "c-batch2.parquet", now - 100)
-
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = stream_staged(
+        spark,
+        "wm_late",
+        [
+            e.filter(~straggler & ~bridge),
+            e.filter(bridge),
+            e.filter(straggler),
+        ],
     )
-    # Watermarks demand TIMESTAMP, not NTZ; session tz is UTC so the
-    # cast is wall-clock identity (same as streaming.stream_events).
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
         stream.withWatermark("ts", "31 minutes")
         .groupBy(F.window("ts", "1 hour"))
@@ -528,15 +475,7 @@ def streaming_watermark_late_drop_live(spark: SparkSession, sf_dir: str) -> Data
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-    name = "wmlate" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    res, q = run_available_now(agg, "append")
     progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(progress) >= 3, (
         f"expected >=3 data micro-batches, got {len(progress)}"
@@ -547,8 +486,8 @@ def streaming_watermark_late_drop_live(spark: SparkSession, sf_dir: str) -> Data
         for op in p["stateOperators"]
     )
     assert dropped > 0, "watermark dropped nothing — staging broke"
-    return spark.table(name).select(
-        F.col("window.start").alias("window_start"), "n", "sum_value"
+    return res.select(
+        as_wall("window.start").alias("window_start"), "n", "sum_value"
     )
 
 
@@ -600,38 +539,10 @@ def streaming_two_level_window_live(spark: SparkSession, sf_dir: str) -> DataFra
     is the whole point of running the pyramid inside the engine.
     Aggregates carry integer cents; n_subwindows counts the 15-min
     buckets feeding each hour (≤ 4 × types)."""
-    import glob
-    import os
-    import shutil
-    import uuid
-
     e = _lt(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    src = scratch_path(spark, "two_level_src")
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src)
-
-    def stage(df, name: str, mtime: float) -> None:
-        tmp = scratch_path(spark, "two_level_tmp_" + uuid.uuid4().hex[:8])
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(src, name)
-        shutil.move(part, dest)
-        os.utime(dest, (mtime, mtime))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    now = os.stat(src).st_mtime
-    stage(e, "a-batch0.parquet", now - 300)
-    stage(e.filter(F.lit(False)), "b-batch1-empty.parquet", now - 100)
-
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = stream_staged(spark, "two_level", [e, e.filter(F.lit(False))])
     l1 = (
         stream.withWatermark("ts", "31 minutes")
         .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
@@ -648,23 +559,15 @@ def streaming_two_level_window_live(spark: SparkSession, sf_dir: str) -> DataFra
             F.count(F.lit(1)).alias("n_subwindows"),
         )
     )
-    name = "twolvl" + uuid.uuid4().hex[:10]
-    q = (
-        l2.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    res, q = run_available_now(l2, "append")
     n_state_ops = max(
         (len(p["stateOperators"]) for p in q.recentProgress), default=0
     )
     assert n_state_ops >= 2, (
         f"expected 2 chained stateful operators, saw {n_state_ops}"
     )
-    return spark.table(name).select(
-        F.col("w2.start").alias("window_start"),
+    return res.select(
+        as_wall("w2.start").alias("window_start"),
         "n_events",
         "cents",
         "n_subwindows",
@@ -711,40 +614,13 @@ def streaming_left_outer_join_live(spark: SparkSession, sf_dir: str) -> DataFram
     (the only outer join that survives unbounded streams); cleanup is
     watermark-driven, no manual TTLs."""
     import datetime as dt
-    import glob
-    import os
-    import shutil
-    import uuid
 
     e = _lt(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     mx = e.agg(F.max("ts")).first()[0]
     old = (F.col("event_id") % 3 == 1) & (
-        F.col("ts") < F.lit(mx - dt.timedelta(hours=1))
+        F.col("ts") < wall_lit(mx - dt.timedelta(hours=1))
     )
-    src = scratch_path(spark, "soj_src")
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src)
-
-    def stage(df, name: str, mtime: float) -> None:
-        tmp = scratch_path(spark, "soj_tmp_" + uuid.uuid4().hex[:8])
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(src, name)
-        shutil.move(part, dest)
-        os.utime(dest, (mtime, mtime))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    now = os.stat(src).st_mtime
-    stage(e.filter(~old), "a-batch0.parquet", now - 200)
-    stage(e.filter(old), "b-batch1.parquet", now - 100)
-
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = stream_staged(spark, "soj", [e.filter(~old), e.filter(old)])
     a = stream.select(
         F.col("user_id").alias("ua"),
         F.col("event_id").alias("eid_a"),
@@ -762,18 +638,9 @@ def streaming_left_outer_join_live(spark: SparkSession, sf_dir: str) -> DataFram
         & (F.col("ts_b") <= F.col("ts_a") + F.expr("INTERVAL 5 MINUTES"))
     )
     out = a.join(b, cond, "leftOuter").select("ua", "eid_a", "eid_b")
-    name = "soj" + uuid.uuid4().hex[:10]
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    res, q = run_available_now(out, "append")
     n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
     assert n_batches >= 2, f"expected >=2 data micro-batches, got {n_batches}"
-    res = spark.table(name)
     assert res.filter(F.col("eid_b").isNull()).limit(1).count() == 1, (
         "no null-extended rows emitted — outer-join state cleanup never ran"
     )
@@ -888,40 +755,13 @@ def streaming_full_outer_join_live(spark: SparkSession, sf_dir: str) -> DataFram
     keeps every boundary strict. Completes the streaming join matrix:
     inner / left outer / full outer, all watermark-bounded state."""
     import datetime as dt
-    import glob
-    import os
-    import shutil
-    import uuid
 
     e = _lt(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     mx = e.agg(F.max("ts")).first()[0]
     old = (F.col("event_id") % 3 == 1) & (
-        F.col("ts") < F.lit(mx - dt.timedelta(hours=1))
+        F.col("ts") < wall_lit(mx - dt.timedelta(hours=1))
     )
-    src = scratch_path(spark, "foj_src")
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src)
-
-    def stage(df, name: str, mtime: float) -> None:
-        tmp = scratch_path(spark, "foj_tmp_" + uuid.uuid4().hex[:8])
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(src, name)
-        shutil.move(part, dest)
-        os.utime(dest, (mtime, mtime))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    now = os.stat(src).st_mtime
-    stage(e.filter(~old), "a-batch0.parquet", now - 200)
-    stage(e.filter(old), "b-batch1.parquet", now - 100)
-
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = stream_staged(spark, "foj", [e.filter(~old), e.filter(old)])
     a = stream.select(
         F.col("user_id").alias("ua"),
         F.col("event_id").alias("eid_a"),
@@ -941,16 +781,7 @@ def streaming_full_outer_join_live(spark: SparkSession, sf_dir: str) -> DataFram
     out = a.join(b, cond, "fullOuter").select(
         F.coalesce("ua", "ub").alias("ua"), "eid_a", "eid_b"
     )
-    name = "foj" + uuid.uuid4().hex[:10]
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.table(name)
+    res, _ = run_available_now(out, "append")
     assert res.filter(F.col("eid_a").isNull()).limit(1).count() == 1, (
         "no right-null rows emitted"
     )
@@ -1008,38 +839,10 @@ def streaming_join_then_window_live(
     Scale: join state ≈ rows within a 5-min + watermark horizon per
     side; agg state one row per open 30-min window. Both
     watermark-evicted — no manual TTL, no unbounded state."""
-    import glob
-    import os
-    import shutil
-    import uuid
-
     e = _lt(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
     )
-    src = scratch_path(spark, "jwa_src")
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src)
-
-    def stage(df, name: str, mtime: float) -> None:
-        tmp = scratch_path(spark, "jwa_tmp_" + uuid.uuid4().hex[:8])
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(src, name)
-        shutil.move(part, dest)
-        os.utime(dest, (mtime, mtime))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    now = os.stat(src).st_mtime
-    stage(e, "a-batch0.parquet", now - 300)
-    stage(e.filter(F.lit(False)), "b-batch1-empty.parquet", now - 100)
-
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = stream_staged(spark, "jwa", [e, e.filter(F.lit(False))])
     a = stream.select(
         F.col("user_id").alias("ua"),
         F.col("event_id").alias("eid_a"),
@@ -1067,23 +870,15 @@ def streaming_join_then_window_live(
             ),
         )
     )
-    name = "jwa" + uuid.uuid4().hex[:10]
-    q = (
-        l2.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    res, q = run_available_now(l2, "append")
     n_state_ops = max(
         (len(p["stateOperators"]) for p in q.recentProgress), default=0
     )
     assert n_state_ops >= 2, (
         f"expected join + agg state operators, saw {n_state_ops}"
     )
-    return spark.table(name).select(
-        F.col("w.start").alias("window_start"), "n_pairs", "cents_b"
+    return res.select(
+        as_wall("w.start").alias("window_start"), "n_pairs", "cents_b"
     )
 
 
@@ -1130,37 +925,8 @@ def streaming_dedup_then_window_live(
 
     Scale: dedup state is bounded by the watermark horizon; agg
     state one row per open window."""
-    import glob
-    import os
-    import shutil
-    import uuid
-
     e = _lt(spark, sf_dir, "events").select("event_id", "ts", "value")
-    src = scratch_path(spark, "ddw_src")
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src)
-
-    def stage(df, name: str, mtime: float) -> None:
-        tmp = scratch_path(spark, "ddw_tmp_" + uuid.uuid4().hex[:8])
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(src, name)
-        shutil.move(part, dest)
-        os.utime(dest, (mtime, mtime))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    now = os.stat(src).st_mtime
-    stage(e, "a-batch0.parquet", now - 300)
-    stage(e, "b-batch1-dup.parquet", now - 200)
-    stage(e.filter(F.lit(False)), "c-batch2-empty.parquet", now - 100)
-
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = stream_staged(spark, "ddw", [e, e, e.filter(F.lit(False))])
     deduped = stream.withWatermark("ts", "31 minutes").dropDuplicates(
         ["event_id"]
     )
@@ -1171,15 +937,7 @@ def streaming_dedup_then_window_live(
             F.sum(F.floor(F.col("value") * 100).cast("long")).alias("cents"),
         )
     )
-    name = "ddw" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    res, q = run_available_now(agg, "append")
     n_state_ops = max(
         (len(p["stateOperators"]) for p in q.recentProgress), default=0
     )
@@ -1192,6 +950,6 @@ def streaming_dedup_then_window_live(
         for op in p["stateOperators"]
     )
     assert dedup_dropped > 0, "state operators saw no rows — staging broke"
-    return spark.table(name).select(
-        F.col("w.start").alias("window_start"), "n_events", "cents"
+    return res.select(
+        as_wall("w.start").alias("window_start"), "n_events", "cents"
     )

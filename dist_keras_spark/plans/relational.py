@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.time import epoch_s
 from dist_keras_spark.operators.asof import asof_join
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.sources.tables import load_table as _lt
@@ -339,11 +340,11 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tiny candidate set. Each qualifying pair appears exactly once
     (the right side carries its single home bin; eid_a < eid_b kills
     the mirror). Epoch seconds are floored identically in the oracle
-    (win_range_frame convention, UTC session)."""
+    (win_range_frame convention)."""
     e = _lt(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.col("ts").cast("timestamp").cast("long").alias("sec"),
+        epoch_s("ts").alias("sec"),
     )
     width = 120
     bin_col = F.floor(F.col("sec") / width)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.time import epoch_s, trunc
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.sources.tables import load_table as _lt
 
@@ -73,12 +74,12 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").alias("yr"),
         F.month("o_orderdate").alias("mo"),
         F.dayofmonth("o_orderdate").alias("dom"),
-        F.date_trunc("month", "o_orderdate").cast("date").alias("month_start"),
+        trunc("month", "o_orderdate").cast("date").alias("month_start"),
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date"))
         .cast("int")
         .alias("days_since_95"),
         F.date_add(F.col("o_orderdate").cast("date"), 7).alias("plus_week"),
-        F.unix_timestamp("o_orderdate").alias("unix_ts"),
+        epoch_s("o_orderdate").alias("unix_ts"),
     )
 
 
@@ -395,7 +396,7 @@ def scalar_calendar_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("o_orderdate").cast("date")
     return o.select(
         "o_orderkey",
-        F.add_months(d, 1).cast("timestamp").alias("next_month_ts"),
+        F.add_months(d, 1).cast("timestamp_ntz").alias("next_month_ts"),
         F.last_day(d).alias("month_end"),
         (F.dayofweek(d) - 1).alias("dow_sun0"),
         F.quarter(d).alias("q"),

@@ -70,7 +70,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
 
     return (
-        lineitem.filter(F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
+        lineitem.filter(F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp_ntz"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(customer, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -120,7 +120,7 @@ def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
     customer = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp")
+        F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz")
     )
     lineitem = _t(spark, sf_dir, "lineitem")
     supplier = _t(spark, sf_dir, "supplier")
@@ -160,8 +160,8 @@ def tpch_q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical pushdown benchmark (all four filters reach parquet)."""
     li = _t(spark, sf_dir, "lineitem")
     return li.filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
+        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
+        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
         & F.col("l_discount").between(0.03, 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
@@ -408,7 +408,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),

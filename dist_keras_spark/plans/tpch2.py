@@ -271,8 +271,8 @@ def tpch_q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE sums over a 2-value group key."""
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
+        (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp_ntz"))
+        & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp_ntz"))
     )
     urgent = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dist_keras_spark.functions.time import epoch_s
 from dist_keras_spark.operators.utils import bounded_window_key
 from dist_keras_spark.plans.registry import query
 from dist_keras_spark.sources.tables import load_table as _lt
@@ -117,12 +118,7 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines define sec = floor(epoch), so frame membership is
     identical; RANGE includes all peers, making ties order-insensitive.
     """
-    # ts may read as TIMESTAMP_NTZ (µs fixtures): NTZ→long is an illegal
-    # cast, so hop through TIMESTAMP first (session tz is UTC, so the
-    # wall-clock→epoch mapping matches DuckDB's epoch()).
-    e = _lt(spark, sf_dir, "events").withColumn(
-        "sec", F.col("ts").cast("timestamp").cast("long")
-    )
+    e = _lt(spark, sf_dir, "events").withColumn("sec", epoch_s("ts"))
     w = W.partitionBy("user_id").orderBy("sec").rangeBetween(-3600, 0)
     return e.select(
         "event_id", F.round(F.sum("value").over(w), 2).alias("rolling_1h")

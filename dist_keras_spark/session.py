@@ -4,8 +4,9 @@ Defaults are chosen for correctness-at-scale first:
   - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
     broadcast-join conversion) — free wins at 100 TB.
   - Arrow on — every Python boundary is vectorized.
-  - UTC session timezone — fixture timestamps are naive/UTC; keeps the
-    DuckDB oracle comparisons stable.
+  - UTC session timezone by default, though no result depends on it:
+    event time is TIMESTAMP_NTZ and only functions/time.py converts it,
+    with helpers that ignore the session zone.
   - shuffle.partitions sized to the local core count; on a real cluster
     AQE coalesces the 2× over-provisioned number down.
 

@@ -5,9 +5,12 @@ predicate pushdown + column pruning (verify with
 ``df.explain('formatted')`` → PushedFilters / ReadSchema), so loaders
 return *lazy* DataFrames, never cached/collected.
 
-The `events.ts` column has shipped as both nanosecond and microsecond
-parquet across fixture generations; `normalize_events_ts` branches on
-the observed read schema so either encoding works (SURVEY.md §7.3).
+Every timestamp column leaves the loader as TIMESTAMP_NTZ (the rule is
+stated in functions/time.py). The `events.ts` column has shipped as both
+nanosecond and microsecond parquet across fixture generations;
+`normalize_ts` branches on the observed read schema so either encoding,
+and either setting of the inference confs, gives the same wall clocks
+(SURVEY.md §7.3).
 
 Schema inference is a Spark job per read, so `read_parquet` keeps
 each file's inferred schema for the process and passes it on later
@@ -19,7 +22,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampType
+
+from ..functions.time import as_wall, from_epoch_us
 
 TABLE_NAMES = (
     "region",
@@ -62,9 +68,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
-def normalize_events_ts(df: DataFrame) -> DataFrame:
-    """Normalize `events.ts` to a microsecond timestamp, whatever the
-    fixture generation shipped.
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """Every timestamp column as a µs TIMESTAMP_NTZ wall clock, whatever
+    the fixture generation shipped or the inference confs say.
 
     - `timestamp[ns]` parquet: Spark 4 rejects it outright
       (PARQUET_TYPE_ILLEGAL) unless ``spark.sql.legacy.parquet.nanosAsLong``
@@ -73,6 +79,9 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
       double's 53-bit mantissa, so float division would corrupt
       timestamps by ±0.25 µs. DuckDB truncates the same file to µs on
       read, so both engines agree exactly at µs precision.
+    - A column that reads as TIMESTAMP (a UTC-adjusted parquet
+      timestamp, or ``inferTimestampNTZ.enabled=false``) is an instant;
+      its UTC reading is the wall clock DuckDB shows.
     - `timestamp[us]` parquet (current fixtures, regenerated
       2026-08-13): Spark reads TIMESTAMP_NTZ natively and matches
       DuckDB exactly — pass through untouched so `ts` predicates stay
@@ -81,25 +90,26 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     Shared by the batch loader and streaming/pipelines.stream_events so
     the two paths can't diverge.
     """
-    dtype = dict(df.dtypes).get("ts")
-    if dtype == "bigint":
-        from pyspark.sql import functions as F
-
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    walls = {
+        f.name: as_wall(f.name)
+        for f in df.schema
+        if isinstance(f.dataType, TimestampType)
+    }
+    if dict(df.dtypes).get("ts") == "bigint":
+        walls["ts"] = from_epoch_us(F.expr("ts div 1000"))
+    return df.withColumns(walls) if walls else df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan of one fixture table (events ts normalized —
-    see `normalize_events_ts`)."""
+    """Lazy parquet scan of one fixture table, timestamps as wall
+    clocks (see `normalize_ts`)."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # Harmless for µs files; required to even read a ns file.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events_ts(read_parquet(spark, path))
-    return read_parquet(spark, path)
+    return normalize_ts(read_parquet(spark, path))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -3,9 +3,11 @@
 `stream_events` reads the events parquet as an unbounded source
 (availableNow processing of existing files = deterministic replay);
 each pipeline applies a watermark and the same expressions as the
-batch twin. `run_available_now` drains a pipeline into a memory sink
-and returns the result table — used by tests and the streaming demo
-queries.
+batch twin. `stream_staged` replays a list of DataFrames as a file
+stream, one micro-batch each, for the queries whose watermark behaviour
+depends on how rows are split into batches. `run_available_now` drains
+a pipeline into a memory sink and returns the result table and the
+finished query — used by tests and the streaming demo queries.
 
 At scale: watermark bounds state; session/tumbling state is keyed by
 (window, key) and expires past the watermark — the standard 100 TB
@@ -18,13 +20,18 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from ..functions.time import as_instant, as_wall
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a streaming source with the same ts
-    normalization as the batch loader (sources.tables.normalize_events_ts
-    — schema-guarded, handles both ns and µs fixture generations)."""
-    from ..sources.tables import normalize_events_ts, read_parquet
+    """events.parquet as a streaming source with the batch loader's ts
+    normalization (sources.tables.normalize_ts), then `ts` as an
+    instant: watermarks demand TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE
+    on TIMESTAMP_NTZ). The pipelines below emit their window and
+    session starts back through `as_wall`."""
+    from ..sources.tables import normalize_ts, read_parquet
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
@@ -34,13 +41,45 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    out = normalize_events_ts(raw)
-    # Watermarks demand TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE
-    # on TIMESTAMP_NTZ). Session tz is UTC, so the cast is wall-clock
-    # identity; batch keeps NTZ pass-through for raw-column pushdown.
-    if dict(out.dtypes).get("ts") == "timestamp_ntz":
-        out = out.withColumn("ts", F.col("ts").cast("timestamp"))
-    return out
+    return normalize_ts(raw).withColumn("ts", as_instant("ts"))
+
+
+def stream_staged(
+    spark: SparkSession, name: str, batches: list[DataFrame]
+) -> DataFrame:
+    """Replay `batches` as a file stream, one micro-batch per DataFrame,
+    in list order, with `ts` as an instant (see `stream_events`).
+
+    Each DataFrame becomes one parquet file under `scratch_path(spark,
+    name)`. FileStreamSource takes files oldest first, so the files get
+    increasing names AND modification times (100 s apart, in the past);
+    maxFilesPerTrigger=1 then makes each file its own micro-batch. An
+    empty DataFrame stages an empty file, which still runs a batch and
+    so advances the watermark."""
+    import glob
+    import os
+    import shutil
+
+    from ..sources.sinks import scratch_path
+
+    src = scratch_path(spark, name)
+    shutil.rmtree(src, ignore_errors=True)
+    os.makedirs(src)
+    now = os.stat(src).st_mtime
+    for i, df in enumerate(batches):
+        tmp = scratch_path(spark, f"{name}_tmp{i}")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        dest = os.path.join(src, f"batch{i:03d}.parquet")
+        shutil.move(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dest)
+        mtime = now - 100 * (len(batches) - i)
+        os.utime(dest, (mtime, mtime))
+        shutil.rmtree(tmp, ignore_errors=True)
+    stream = (
+        spark.readStream.schema(batches[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    return stream.withColumn("ts", as_instant("ts"))
 
 
 def streaming_tumbling_counts(events: DataFrame) -> DataFrame:
@@ -50,7 +89,7 @@ def streaming_tumbling_counts(events: DataFrame) -> DataFrame:
         events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
+        .select(as_wall("w.start").alias("window_start"), "event_type", "n", "sum_value")
     )
 
 
@@ -63,7 +102,7 @@ def streaming_sliding_counts(events: DataFrame) -> DataFrame:
         events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "n", "sum_value")
+        .select(as_wall("w.start").alias("window_start"), "n", "sum_value")
     )
 
 
@@ -73,7 +112,7 @@ def streaming_session_agg(events: DataFrame) -> DataFrame:
         events.withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n", "sum_value")
+        .select("user_id", as_wall("w.start").alias("session_start"), "n", "sum_value")
     )
 
 
@@ -93,7 +132,7 @@ def streaming_session_dynamic_agg(events: DataFrame) -> DataFrame:
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
-            "user_id", F.col("w.start").alias("session_start"), "n", "sum_value"
+            "user_id", as_wall("w.start").alias("session_start"), "n", "sum_value"
         )
     )
 
@@ -215,9 +254,12 @@ def run_foreach_batch_to_parquet(stream_df: DataFrame, path: str) -> None:
     q.awaitTermination()
 
 
-def run_available_now(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
+def run_available_now(
+    stream_df: DataFrame, output_mode: str = "complete"
+) -> tuple[DataFrame, StreamingQuery]:
     """Drain a streaming DataFrame with Trigger.AvailableNow into a
-    memory sink; returns the materialized result (A9)."""
+    memory sink; returns the materialized result (A9) and the finished
+    query, whose `recentProgress` shows what each micro-batch did."""
     name = "s" + uuid.uuid4().hex[:12]
     q = (
         stream_df.writeStream.format("memory")
@@ -227,4 +269,4 @@ def run_available_now(stream_df: DataFrame, output_mode: str = "complete") -> Da
         .start()
     )
     q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+    return stream_df.sparkSession.table(name), q

@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.time import as_wall
+
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n long, total double"
 
@@ -110,7 +112,7 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
 
 
 CAP_SESSION_OUTPUT = (
-    "user_id long, session_start timestamp, n long, span_s long, is_open int"
+    "user_id long, session_start timestamp_ntz, n long, span_s long, is_open int"
 )
 # open-session state ONLY — bounded per key regardless of history:
 # gap-session anchor seconds, previous event seconds, current sub
@@ -182,8 +184,10 @@ def capped_sessions(events: DataFrame) -> DataFrame:
     bounded, the property the batch twin `sessionize_with_cap`
     documents); closed sessions emit incrementally, the open one
     re-emits flagged each batch so the drained sink always holds
-    every session's latest summary."""
-    return events.groupBy("user_id").applyInPandasWithState(
+    every session's latest summary. `ts` enters pandas as a wall clock
+    (pandas would see a TIMESTAMP in the session zone)."""
+    walls = events.withColumn("ts", as_wall("ts"))
+    return walls.groupBy("user_id").applyInPandasWithState(
         _cap_update,
         outputStructType=CAP_SESSION_OUTPUT,
         stateStructType=CAP_SESSION_STATE,

@@ -11,7 +11,15 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[4]", shuffle_partitions=8)
+    # get_spark lets the driver heap grow to 48g; on a 15 GB host the
+    # suite's JVM reached 15.5 GB resident and was OOM-killed, failing
+    # every later test. sf0.001 needs a fraction of 8g.
+    s = get_spark(
+        "tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "8g"},
+    )
     yield s
     s.stop()
 
@@ -38,3 +46,19 @@ def checkpoint_dir(spark, tmp_path):
     yield enable
     getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
     assert sc.getCheckpointDir() is None
+
+
+@pytest.fixture
+def session_tz(spark):
+    """Factory: calling it with a zone id sets the shared session's
+    `spark.sql.session.timeZone`. Teardown restores the zone the session
+    had; otherwise every later test would run in the probe's zone."""
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key)
+
+    def set_zone(zone: str) -> None:
+        spark.conf.set(key, zone)
+
+    yield set_zone
+    spark.conf.set(key, before)
+    assert spark.conf.get(key) == before

@@ -37,7 +37,7 @@ def test_udtf_token_explode(spark):
 
 
 def test_stateful_stream_equals_batch_totals(spark, sf_dir):
-    out = run_available_now(
+    out, _ = run_available_now(
         running_user_totals(stream_events(spark, sf_dir)), "update"
     )
     batch = (
@@ -107,7 +107,7 @@ def test_tws_variant_gated_or_equal(spark, sf_dir):
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    out = run_available_now(
+    out, _ = run_available_now(
         running_user_totals_tws(stream_events(spark, sf_dir)), "update"
     )
     batch = (

@@ -54,7 +54,7 @@ def test_mllib_knn_returns_k(spark, sf_dir):
 
 
 def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
-    stream_out = run_available_now(
+    stream_out, _ = run_available_now(
         streaming_interval_self_join(stream_events(spark, sf_dir)), "append"
     )
     ev = load_table(spark, sf_dir, "events")

@@ -148,7 +148,7 @@ def test_compact_parquet_failure_leaves_live_data(spark, sf_dir, tmp_path, monke
 def test_events_loader_handles_both_ts_encodings(spark, tmp_path):
     """Fixture generations have shipped events.ts as BOTH nanosecond
     int64 parquet (rounds 1-3) and native microsecond timestamp
-    (round 4+). normalize_events_ts branches on the observed read
+    (round 4+). normalize_ts branches on the observed read
     schema; this pins both branches to the same wall-clock result so a
     future fixture regeneration (or revert) cannot silently break one
     path again."""
@@ -196,7 +196,7 @@ def test_current_fixture_ts_encoding_is_covered(spark, sf_dir):
     """Fixture-drift canary (VERDICT r5 #2): the driver has regenerated
     /root/testdata twice with different events.ts encodings. This test
     reads the CURRENT fixture's physical arrow type and fails loudly if
-    a third encoding appears that `normalize_events_ts` has no branch
+    a third encoding appears that `normalize_ts` has no branch
     for — turning the next drift from 19 crashed queries into one named
     test failure pointing at sources/tables.py."""
     import pyarrow.dataset as ds
@@ -205,15 +205,15 @@ def test_current_fixture_ts_encoding_is_covered(spark, sf_dir):
     ts_type = str(ds.dataset(f"{sf_dir}/events.parquet").schema.field("ts").type)
     assert ts_type in covered, (
         f"events.ts fixture encoding {ts_type!r} is not one "
-        f"normalize_events_ts handles ({covered}); add a branch in "
-        "dist_keras_spark/sources/tables.py::normalize_events_ts"
+        f"normalize_ts handles ({covered}); add a branch in "
+        "dist_keras_spark/sources/tables.py::normalize_ts"
     )
     # and the normalizer's POST-condition: whatever shipped, the loaded
-    # column is a µs-class timestamp, never a raw integer
+    # column is a wall clock, never a raw integer or an instant
     from dist_keras_spark.sources.tables import load_table
 
     loaded = dict(load_table(spark, sf_dir, "events").dtypes)["ts"]
-    assert loaded in ("timestamp", "timestamp_ntz"), loaded
+    assert loaded == "timestamp_ntz", loaded
 
 
 def test_snapshot_isolation_and_atomic_publish(spark, tmp_path):
@@ -275,7 +275,7 @@ def test_python_datasource_stream_equals_batch(spark):
     stream = (
         spark.readStream.format("synthetic_events").option("rows", 120).load()
     )
-    drained = run_available_now(stream, output_mode="append")
+    drained, _ = run_available_now(stream, output_mode="append")
     assert sorted(map(tuple, drained.collect())) == sorted(
         map(tuple, batch.collect())
     )
@@ -285,8 +285,8 @@ def test_schema_cache_reinfers_rewritten_file_and_changed_conf(spark, tmp_path):
     """load_table reads with a cached inferred schema, keyed by file
     identity and the inference confs: a repeat read runs no Spark job, an
     events file rewritten from µs to ns at the same path is inferred again
-    (and takes normalize_events_ts's bigint branch), and a changed
-    inference conf misses the cache."""
+    (and takes normalize_ts's bigint branch), and a changed inference conf
+    misses the cache. Every branch returns the same wall clocks as NTZ."""
     import datetime as dt
 
     import pyarrow as pa
@@ -318,15 +318,21 @@ def test_schema_cache_reinfers_rewritten_file_and_changed_conf(spark, tmp_path):
     assert dict(again.dtypes)["ts"] == "timestamp_ntz"
 
     write(pa.timestamp("ns"))
-    rewritten, _ = load("schema-cache-rewritten")
-    assert dict(rewritten.dtypes)["ts"] == "timestamp"  # the bigint branch
+    rewritten, rewritten_jobs = load("schema-cache-rewritten")
+    assert rewritten_jobs > 0
+    assert dict(rewritten.dtypes)["ts"] == "timestamp_ntz"  # the bigint branch
     assert [r["ts"] for r in rewritten.orderBy("event_id").collect()] == stamps
 
     write(pa.timestamp("us"))
+    load("schema-cache-rewritten-back")
     conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
     spark.conf.set(conf, "false")
     try:
-        assert dict(load("schema-cache-conf")[0].dtypes)["ts"] == "timestamp"
+        as_instants, conf_jobs = load("schema-cache-conf")
+        assert conf_jobs > 0  # the conf is part of the key
+        assert dict(as_instants.dtypes)["ts"] == "timestamp_ntz"
+        assert [r["ts"] for r in as_instants.orderBy("event_id").collect()] == stamps
     finally:
         spark.conf.unset(conf)
-    assert dict(load("schema-cache-conf-reset")[0].dtypes)["ts"] == "timestamp_ntz"
+    reset, reset_jobs = load("schema-cache-conf-reset")
+    assert reset_jobs == 0 and dict(reset.dtypes)["ts"] == "timestamp_ntz"

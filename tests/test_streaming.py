@@ -22,7 +22,7 @@ def _sorted_rows(df, cols):
 
 
 def test_stream_tumbling_equals_batch(spark, sf_dir):
-    stream_out = run_available_now(
+    stream_out, _ = run_available_now(
         streaming_tumbling_counts(stream_events(spark, sf_dir)), "complete"
     )
     batch_out = QUERIES["events_tumbling_hourly"](spark, sf_dir)
@@ -31,7 +31,7 @@ def test_stream_tumbling_equals_batch(spark, sf_dir):
 
 
 def test_stream_session_equals_batch(spark, sf_dir):
-    stream_out = run_available_now(
+    stream_out, _ = run_available_now(
         streaming_session_agg(stream_events(spark, sf_dir)), "complete"
     )
     batch_out = QUERIES["events_session_window"](spark, sf_dir)
@@ -40,7 +40,7 @@ def test_stream_session_equals_batch(spark, sf_dir):
 
 
 def test_stream_dedup_keeps_all_unique_ids(spark, sf_dir):
-    out = run_available_now(streaming_dedup(stream_events(spark, sf_dir)), "append")
+    out, _ = run_available_now(streaming_dedup(stream_events(spark, sf_dir)), "append")
     n_events = load_table(spark, sf_dir, "events").count()
     assert out.count() == n_events  # event_id already unique → nothing dropped
     assert out.select("event_id").distinct().count() == n_events
@@ -49,7 +49,7 @@ def test_stream_dedup_keeps_all_unique_ids(spark, sf_dir):
 def test_stream_static_join_equals_batch(spark, sf_dir):
     ev = stream_events(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
-    stream_out = run_available_now(streaming_stream_static_join(ev, cust), "complete")
+    stream_out, _ = run_available_now(streaming_stream_static_join(ev, cust), "complete")
     batch_out = QUERIES["events_stream_static_join"](spark, sf_dir)
     cols = ["c_mktsegment", "event_type", "n", "sum_value"]
     assert _sorted_rows(stream_out, cols) == _sorted_rows(batch_out, cols)
