@@ -115,6 +115,28 @@ def _cpu_mix(a: list[int], b: list[int]) -> dict[str, float]:
     }
 
 
+def time_query(spark, fn, sf_dir: str, runs: int, warm: bool = True) -> dict:
+    """The one per-query timing routine: with `warm`, execute `fn` once
+    at WARM_DIR (codegen + broadcast) and once, untimed, at `sf_dir` —
+    the first full-size execution pays fresh-plan codegen + JIT that
+    later executions of the same query don't (see
+    spark.sql.codegen.cache notes in session.py) — then time `runs`
+    noop-sink executions at `sf_dir`. Returns the trace entry
+    {"warm_sf0.001": s, "warm_full": s, "runs": [s, ...]}; the warm
+    times read 0.0 when `warm` is False."""
+
+    def timed(d: str) -> float:
+        t0 = time.perf_counter()
+        _materialize(fn(spark, d))
+        return round(time.perf_counter() - t0, 3)
+
+    return {
+        "warm_sf0.001": timed(WARM_DIR) if warm else 0.0,
+        "warm_full": timed(sf_dir) if warm else 0.0,
+        "runs": [timed(sf_dir) for _ in range(runs)],
+    }
+
+
 def _run_suite(spark, base_runs: int, warm: bool) -> tuple[dict, dict, dict]:
     """One full pass over BENCH_QUERIES: per-query min-of-N timings,
     per-query run trace, and the CPU mix measured over this pass's
@@ -127,22 +149,8 @@ def _run_suite(spark, base_runs: int, warm: bool) -> tuple[dict, dict, dict]:
     cpu0 = _cpu_sample()
     for name in BENCH_QUERIES:
         fn = QUERIES[name]
-        t_warm_small = t_warm_full = 0.0
-        if warm:
-            t0 = time.perf_counter()
-            _materialize(fn(spark, WARM_DIR))  # warm: codegen + broadcast
-            t_warm_small = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            _materialize(fn(spark, SF_DIR))  # untimed steady-state warm at
-            # the measured size: the first full-size execution pays
-            # fresh-plan codegen + JIT that later executions of the same
-            # query don't (see spark.sql.codegen.cache notes in session.py)
-            t_warm_full = time.perf_counter() - t0
-        runs = []
-        for _ in range(base_runs):
-            t0 = time.perf_counter()
-            _materialize(fn(spark, SF_DIR))
-            runs.append(round(time.perf_counter() - t0, 3))
+        trace[name] = time_query(spark, fn, SF_DIR, base_runs, warm)
+        runs = trace[name]["runs"]
         # Adaptive noise guard: a >3× spread means co-tenant load hit
         # the whole batch (observed: a 2.2s query reporting 7.7s when
         # system load spiked to 11) — take up to 3 extra runs so one
@@ -159,16 +167,9 @@ def _run_suite(spark, base_runs: int, warm: bool) -> tuple[dict, dict, dict]:
 
         extra = 0
         while extra < 3 and _min_unconfirmed():
-            t0 = time.perf_counter()
-            _materialize(fn(spark, SF_DIR))
-            runs.append(round(time.perf_counter() - t0, 3))
+            runs += time_query(spark, fn, SF_DIR, 1, warm=False)["runs"]
             extra += 1
         timings[name] = min(runs)
-        trace[name] = {
-            "warm_sf0.001": round(t_warm_small, 3),
-            "warm_full": round(t_warm_full, 3),
-            "runs": runs,
-        }
     return timings, trace, _cpu_mix(cpu0, _cpu_sample())
 
 
@@ -430,16 +431,11 @@ def _sf1_leg(spark, t_start: float) -> dict:
     runs_trace: dict[str, list[float]] = {}
     cpu0 = _cpu_sample()
     for name in BENCH_QUERIES:
-        fn = QUERIES[name]
-        runs = []
         # first run doubles as the sf1 codegen warm (plans differ from
         # the sf0.1 ones); min-of-2 is the budget-bounded compromise
-        for _ in range(SF1_LEG_RUNS):
-            t0 = time.perf_counter()
-            _materialize(fn(spark, sf1_dir))
-            runs.append(round(time.perf_counter() - t0, 3))
-        timings[name] = min(runs)
-        runs_trace[name] = runs
+        entry = time_query(spark, QUERIES[name], sf1_dir, SF1_LEG_RUNS, warm=False)
+        timings[name] = min(entry["runs"])
+        runs_trace[name] = entry["runs"]
     mix = _cpu_mix(cpu0, _cpu_sample())
     return {
         "sf_dir": sf1_dir,

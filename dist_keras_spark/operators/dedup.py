@@ -43,7 +43,7 @@ def _stage(df: DataFrame) -> DataFrame:
     and dies with the executors. Retained-block cost (ADVICE r13): each
     invocation checkpoints a fresh RDD and nothing unpersists it until
     the DataFrame is GC'd on the driver (ContextCleaner then drops the
-    blocks), so tight re-invocation loops (bench min-of-N, ab_time)
+    blocks), so tight re-invocation loops (bench.time_query's timed runs)
     accumulate executor block-manager storage between GCs. Fine for
     fixture-sized staged frames (narrow id/hash columns); at larger SFs
     set a checkpoint dir, or hold no references so the cleaner can run.
@@ -689,7 +689,7 @@ def substring_dup_pairs_poly(
 
     100 TB: the window shuffles (id, pos, two int64 terms) — compare
     the md5 twin's zero-shuffle-but-O(tokens·n·bytes) scan; pick by
-    measurement (bench_extended traces both)."""
+    measurement (bench_extended_trace.json times both)."""
     toks = tokens(F.col(text_col))
     base = df.filter(F.size(toks) >= n).select(
         F.col(id_col).alias("id"), toks.alias("t")

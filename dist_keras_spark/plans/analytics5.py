@@ -2582,7 +2582,7 @@ def substring_dedup_50gram_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation measured ~100× SLOWER than md5 strings (Spark
     evaluates HOF lambdas interpreted), so the windowed codegen
     formulation is the one that ships. Both twins stay registered;
-    bench_extended traces both."""
+    bench_extended_trace.json times both."""
     docs = _lt(spark, sf_dir, "documents")
     from dist_keras_spark.operators.dedup import substring_dup_pairs_poly
 

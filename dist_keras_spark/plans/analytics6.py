@@ -3229,9 +3229,9 @@ def blocking_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-bucketed (never all-pairs); truth reuses the inverted index
     — and at true scale you certify on a SAMPLED stratum:
     `blocking_quality_sampled` IS that production shape, measured
-    (bench_extended_trace.json "blocking_ab": full 2.58s vs 50%
-    1.91s vs 10% 1.35s at sf0.1, min over 25 runs/point via
-    tools/bench_blocking_ab.py)."""
+    (the committed bench_extended_trace.json "blocking_ab" entry:
+    full 2.58s vs 50% 1.91s vs 10% 1.35s at sf0.1, min over 25
+    runs/point)."""
     return _blocking_quality_frame(spark, sf_dir)
 
 
@@ -3251,8 +3251,8 @@ def blocking_quality_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full-corpus numbers — the standard record-linkage evaluation
     protocol. The oracle replays the identical stratum digit-by-digit.
 
-    MEASURED (tools/bench_blocking_ab.py → bench_extended_trace.json
-    "blocking_ab", sf0.1, min over 25 runs/point): full 2.58s →
+    MEASURED (the committed bench_extended_trace.json "blocking_ab"
+    entry, sf0.1, min over 25 runs/point): full 2.58s →
     50% 1.91s → 10% 1.35s, and the pair-space counts fall exactly
     ∝ pct² as claimed (n_true/n_candidates 256 → 54 → 3 vs the
     pct²·256 prediction of 64 / 2.56) while the completeness/

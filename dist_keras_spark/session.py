@@ -22,6 +22,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 48g. A fixed 48g let one JVM
+    grow past what a 15.7 GB host holds: a verify_local-style run was
+    OOM-killed at 13.1 GB resident while a test session ran beside it."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "dist_keras_spark",
     master: str | None = None,
@@ -31,7 +39,8 @@ def get_spark(
     """Build (or fetch) a SparkSession with engine defaults.
 
     Honors ``SPARK_GRAFT_CPUS`` for local-mode parallelism so the bench
-    driver can pin core counts.
+    driver can pin core counts, and ``SPARK_GRAFT_DRIVER_MEM`` for the
+    driver heap (default: half of physical memory, at most 48g).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:
@@ -51,7 +60,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Generated-class cache: the default 100 entries evicts hot

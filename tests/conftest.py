@@ -11,15 +11,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    # get_spark lets the driver heap grow to 48g; on a 15 GB host the
-    # suite's JVM reached 15.5 GB resident and was OOM-killed, failing
-    # every later test. sf0.001 needs a fraction of 8g.
-    s = get_spark(
-        "tests",
-        master="local[4]",
-        shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "8g"},
-    )
+    s = get_spark("tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
 
