@@ -46,16 +46,19 @@ WARM_DIR = "/root/testdata/sf0.001"
 # mapInArrow journey summary, so the Arrow-native Python boundary (the
 # recommended fast path for per-key sequential logic) has a
 # driver-visible number. Round 8 adds interpolate_linear_gaps as the
-# O(rows^2)-frame regression guard: it was 18.2s under a
+# window-over-the-grid regression guard: it was 18.2s under a
 # [currentRow, unboundedFollowing] frame and 1.24s with the
-# reversed-order running frame, so a regression to the quadratic
-# pattern shows up as a >10x spike the driver sees.
+# reversed-order running frame; it now runs one window over the
+# hourly aggregate and none over the exploded grid (~0.7s on 4
+# cores), so putting a frame back on the grid shows up as a spike
+# in the suite total.
 # Like-for-like vs r7 = total minus that entry.
 # Round 9 adds ppjoin_prefix_filter_pairs as the interpreted-HOF
 # regression guard: exploding a transform()-built shingle array ran
 # the whole op at 4.7-21.6s; the codegen explode-positions postings
-# path runs it at ~1.8-2.2s, so a regression to the interpreted
-# pattern shows up as a >2x spike the driver sees.
+# path ran it at ~1.8-2.2s (one staged per-document frame since,
+# ~1.1s on 4 cores), so a regression to the interpreted pattern
+# shows up as a >2x spike in the suite total.
 # Like-for-like vs r8 = total minus that entry.
 BENCH_QUERIES = [
     "revenue_by_nation",

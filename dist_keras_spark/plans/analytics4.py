@@ -413,10 +413,16 @@ def interpolate_linear_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear interpolation of missing points on a dense per-user
     hourly grid — the M2 completion past LOCF (win_locf_forward_fill):
     gaps are filled on the line between the PREVIOUS and NEXT observed
-    hours, weighted by time distance. Four IGNORE-NULLS/conditional
-    windows over ONE user-keyed sort deliver (prev, next) value+time
-    per gap row; the grid itself is a sequence explode between each
-    user's first and last observation (never a global calendar).
+    hours, weighted by time distance. Every grid hour lies between
+    exactly one pair of consecutive observations, so ONE user-keyed
+    window over the hourly aggregate bounds every grid row: each
+    observed hour explodes `sequence(h, next_observed_h − 1h)` (a
+    user's last observation emits just itself; never a global
+    calendar), and each exploded row carries its previous and next
+    observation (hour, cents). A row is observed iff its hour is the
+    previous observation's. An hour whose values are all null has null
+    cents and is a gap, as in the oracle: prev/next skip it (IGNORE
+    NULLS, in the same window).
 
     EXACTNESS: the interpolated value is emitted as an integer
     RATIONAL (numerator scaled by den=3600; the slope term is
@@ -427,84 +433,47 @@ def interpolate_linear_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     class of hash-divergence the house rules ban. Consumers divide
     num/den; the driver hashes exact ints.
 
-    Scale: everything partitions on user_id; grid width is bounded by
-    each user's observed span, and the four windows share one
-    shuffle.
-
-    r14 (guide §2.4, dup-scan sweep): the grid used to be built as a
-    separate per-user span aggregate + sequence explode LEFT JOINed
-    back onto `hourly` — two consumers of `hourly`, pruned
-    differently, so the events scan + hourly aggregate executed twice
-    (events×2, 0 ReusedExchange) plus a join shuffle. The same frame
-    is now emitted in ONE pass: each observed hour explodes
-    `sequence(h, next_observed_h − 1h)` (lead over the user timeline;
-    a lone/last observation emits just itself), carrying cents only
-    on the observed row. Consecutive observations tile [h0, h1]
-    exactly, so the union of these slices IS the old grid, row for
-    row. Final plan: 1 events scan, join gone, exchanges 4→2; oracle
-    (which still declares the grid + left join) hash-green at 3 SFs."""
+    Scale: one events scan and one user_id shuffle + sort, of the
+    hourly aggregate; the exploded grid (~1M rows at sf0.1) is never
+    shuffled or sorted. The plan this replaced ran forward and
+    reversed running windows over the exploded grid (two more sorts
+    of it). Same rows at sf0.001–sf1; measured on 4 local cores
+    (interleaved, noop sink, min of runs) sf0.1 1.37s → 0.74s, sf1
+    (tools/gen_benchdata.py) 5.5s → 2.0–2.2s. The oracle still
+    declares the grid + left join + four windows."""
     e = _lt(spark, sf_dir, "events")
     # The grid runs on hour starts as epoch seconds (longs); `h` is
     # rebuilt as a wall clock only for the output.
     sec = epoch_s("ts")
     hour = F.lit(3600).cast("long")
-    hourly = e.groupBy(
-        "user_id", (sec - F.pmod(sec, hour)).alias("hs")
-    ).agg(F.floor(F.avg("value") * 100).cast("long").alias("cents"))
-    wl = W.partitionBy("user_id").orderBy("hs")
-    withnext = hourly.select(
-        "user_id", "hs", "cents", F.lead("hs").over(wl).alias("lead_hs")
+    hourly = (
+        e.groupBy("user_id", (sec - F.pmod(sec, hour)).alias("obs_s"))
+        .agg(F.floor(F.avg("value") * 100).cast("long").alias("cents"))
+        .withColumn("val_s", F.when(F.col("cents").isNotNull(), F.col("obs_s")))
     )
-    joined = withnext.select(
+    wl = W.partitionBy("user_id").orderBy("obs_s")
+    over = "OVER (PARTITION BY user_id ORDER BY obs_s)"
+    bounded = hourly.select(
         "user_id",
-        "cents",
-        F.col("hs").alias("ohs"),
-        F.explode(
-            F.sequence(
-                "hs", F.coalesce(F.col("lead_hs") - hour, F.col("hs")), hour
-            )
-        ).alias("hs"),
-    ).select(
-        "user_id",
-        "hs",
-        F.when(F.col("hs") == F.col("ohs"), F.col("cents")).alias("cents"),
+        "obs_s",
+        F.lead("obs_s").over(wl).alias("lead_s"),
+        F.last("val_s", ignorenulls=True).over(wl).alias("prev_s"),
+        F.last("cents", ignorenulls=True).over(wl).alias("prev_c"),
+        F.expr(f"lead(val_s) IGNORE NULLS {over}").alias("next_s"),
+        F.expr(f"lead(cents) IGNORE NULLS {over}").alias("next_c"),
     )
-    wb = (
-        W.partitionBy("user_id")
-        .orderBy("hs")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    # "next" values via the REVERSED order with a running frame, not a
-    # [currentRow, unboundedFollowing] frame: Spark recomputes
-    # unbounded-FOLLOWING aggregates per row (O(rows²) per partition —
-    # measured 18s vs 2s at sf0.1 on this very query), while running
-    # frames are incremental. last/min over the reversed prefix ==
-    # first/min over the forward suffix.
-    wf = (
-        W.partitionBy("user_id")
-        .orderBy(F.col("hs").desc())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    obs_s = F.when(F.col("cents").isNotNull(), F.col("hs"))
-    bounded = joined.select(
-        "user_id",
-        "hs",
-        "cents",
-        F.last("cents", ignorenulls=True).over(wb).alias("prev_c"),
-        F.max(obs_s).over(wb).alias("prev_s"),
-        F.last("cents", ignorenulls=True).over(wf).alias("next_c"),
-        F.min(obs_s).over(wf).alias("next_s"),
-    )
+    last_s = F.coalesce(F.col("lead_s") - hour, F.col("obs_s"))
+    grid = bounded.withColumn("hs", F.explode(F.sequence("obs_s", last_s, hour)))
     interp = F.col("prev_c") * 3600 + F.floor(
         (F.col("next_c") - F.col("prev_c"))
         * (F.col("hs") - F.col("prev_s"))
         * 3600
         / (F.col("next_s") - F.col("prev_s"))
     ).cast("long")
-    return bounded.select(
+    return grid.select(
         "user_id",
         from_epoch_us(F.col("hs") * 1_000_000).alias("h"),
-        F.when(F.col("cents").isNotNull(), F.col("cents") * 3600)
+        F.when(F.col("hs") == F.col("prev_s"), F.col("prev_c") * 3600)
         .otherwise(interp)
         .alias("interp_num"),
         F.lit(3600).cast("long").alias("interp_den"),

@@ -106,6 +106,10 @@ def test_interpolation_is_bounded_and_exact_on_observed(spark, sf_dir):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert not re.findall(r"\w+Join", plan), plan
     assert len(re.findall(r"FileScan parquet", plan)) == 1, plan
+    # One window (one user-keyed sort) over the hourly aggregate: no
+    # running or reversed windows over the exploded grid.
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert "DESC" not in plan, plan
     e = spark.read.parquet(f"{sf_dir}/events.parquet")
     hourly = (
         e.groupBy("user_id", F.date_trunc("hour", "ts").alias("h"))
@@ -133,6 +137,77 @@ def test_interpolation_is_bounded_and_exact_on_observed(spark, sf_dir):
             lo, hi = min(prev_c, next_c), max(prev_c, next_c)
             assert lo * 3600 <= r.interp_num <= hi * 3600, key
     assert n_interp > 0, "fixture produced no gaps — test is vacuous"
+
+
+def test_interpolation_matches_oracle_on_crafted_events(spark, tmp_path):
+    """Hand-made events against the query's DuckDB oracle: a user with a
+    single observation, a negative slope whose quotient is not an integer
+    (floor, not truncation), adjacent observed hours, two events in one
+    hour (averaged), a multi-hour gap, and hours whose values are all
+    null (leading, interior, trailing: gaps, as in the oracle)."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dist_keras_spark.plans import ORACLE
+
+    def at(hour: int, minute: int) -> dt.datetime:
+        return dt.datetime(2024, 3, 1, hour, minute)
+
+    events = [  # (user_id, ts, value)
+        (1, at(10, 15), 1.25),  # single observation
+        (2, at(10, 5), 9.0),  # 7-hour gap, slope -799/7 cents per hour
+        (2, at(17, 30), 1.01),
+        (2, at(18, 10), 2.0),  # adjacent to 17:00
+        (3, at(8, 1), 1.0),  # two events in 08:00, averaged to 1.5
+        (3, at(8, 59), 2.0),
+        (3, at(11, 0), 3.33),
+        (4, at(0, 10), None),  # all-null hours: leading, interior, trailing
+        (4, at(1, 20), 5.0),
+        (4, at(2, 30), None),
+        (4, at(4, 0), 7.5),
+        (4, at(5, 0), None),
+    ]
+    n = len(events)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": list(range(n)),
+                "ts": pa.array([e[1] for e in events], type=pa.timestamp("us")),
+                "user_id": [e[0] for e in events],
+                "event_type": ["view"] * n,
+                "value": pa.array([e[2] for e in events], type=pa.float64()),
+                "props": ["{}"] * n,
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    got = sorted(
+        map(tuple, interpolate_linear_gaps(spark, str(tmp_path)).collect()),
+        key=repr,
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    want = sorted(
+        map(tuple, con.execute(ORACLE["interpolate_linear_gaps"]).fetchall()),
+        key=repr,
+    )
+    con.close()
+    assert got == want
+    by_user: dict[int, list] = {}
+    for r in got:
+        by_user.setdefault(r[0], []).append(r)
+    assert [len(by_user[u]) for u in (1, 2, 3, 4)] == [1, 9, 4, 6]
+    # 11:00 on user 2: 900·3600 + floor(−799·3600/7) = 3240000 − 410915
+    assert (2, at(11, 0), 2829085, 3600) in got
+    assert [r[2] is None for r in sorted(by_user[4])] == [
+        True, False, False, False, False, True
+    ]
 
 
 def test_salted_join_invariant_under_salt_count(spark, sf_dir):

@@ -289,6 +289,69 @@ def test_ppjoin_prefix_index_is_smaller_and_lossless(spark, sf_dir):
     assert (1, 3) not in got and (2, 3) not in got
 
 
+# Five documents over a 7-word vocabulary: several docs' prefixes end
+# inside a run of shingles with equal document frequency, and a df cap
+# of 2 drops two of the three τ ≥ 0.6 pairs.
+PP_TIED_DOCS = [
+    (1, "w4 w5 w0 w5 w3 w3 w2"),
+    (2, "w3 w0 w1 w1 w4 w6 w0"),
+    (3, "w4 w5 w0 w5 w3 w3 w2"),
+    (4, "w3 w5 w1 w1 w4 w6 w0"),
+    (5, "w4 w5 w0 w5 w3 w3 w5"),
+]
+
+
+def test_ppjoin_matches_both_oracles_when_prefix_dfs_tie(spark):
+    """ppjoin_prefix_pairs against the plain-join oracle (no cap) and
+    the dfcap oracle with its cap set to 2, on documents whose prefixes
+    tie on df. Any consistent df-ascending order gives the same pairs,
+    so this pins the order being global and df-first: ordering by
+    shingle alone, or by df descending, changes the capped answer."""
+    import duckdb
+    import pandas as pd
+
+    from dist_keras_spark.operators.dedup import ppjoin_prefix_pairs
+    from dist_keras_spark.plans import ORACLE
+    from dist_keras_spark.plans.analytics6 import _PP_DF_CAP
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(PP_TIED_DOCS, columns=["doc_id", "text"]))
+    cap_sql = ORACLE["ppjoin_dfcap_pairs"].replace(f"df <= {_PP_DF_CAP}", "df <= 2")
+    assert cap_sql != ORACLE["ppjoin_dfcap_pairs"]
+    plain = sorted(con.execute(ORACLE["ppjoin_prefix_filter_pairs"]).fetchall())
+    capped = sorted(con.execute(cap_sql).fetchall())
+    con.close()
+    assert capped and len(capped) < len(plain)  # the cap decides pairs
+
+    docs = spark.createDataFrame(PP_TIED_DOCS, "doc_id long, text string")
+
+    def pairs(max_df):
+        out = ppjoin_prefix_pairs(docs, "doc_id", "text", n=4, max_df=max_df)
+        return sorted(map(tuple, out.collect()))
+
+    assert pairs(None) == plain
+    assert pairs(2) == capped
+
+
+def test_ppjoin_stages_one_frame_per_call(spark, monkeypatch):
+    from dist_keras_spark.operators import dedup
+
+    calls = []
+    real = dedup._stage
+
+    def counting(df):
+        calls.append(df.columns)
+        return real(df)
+
+    monkeypatch.setattr(dedup, "_stage", counting)
+    docs = spark.createDataFrame(PP_TIED_DOCS, "doc_id long, text string")
+    for max_df in (None, 2):
+        before = len(calls)
+        dedup.ppjoin_prefix_pairs(docs, "doc_id", "text", n=4, max_df=max_df)
+        assert len(calls) == before + 1
+    assert calls[0] == ["id", "ns", "sh", "pre"]
+
+
 def test_label_propagation_labels_form_communities(spark, sf_dir):
     from dist_keras_spark.plans.analytics6 import label_propagation_two_rounds
 

@@ -308,7 +308,11 @@ def test_schema_cache_reinfers_rewritten_file_and_changed_conf(spark, tmp_path):
         try:
             df = load_table(spark, str(tmp_path), "events")
         finally:
-            sc.setJobGroup("", "")
+            # Clear what setJobGroup set; setJobGroup("", "") would leave
+            # group "" on this thread for every later test.
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
         return df, len(sc.statusTracker().getJobIdsForGroup(group))
 
     write(pa.timestamp("us"))
@@ -336,3 +340,4 @@ def test_schema_cache_reinfers_rewritten_file_and_changed_conf(spark, tmp_path):
         spark.conf.unset(conf)
     reset, reset_jobs = load("schema-cache-conf-reset")
     assert reset_jobs == 0 and dict(reset.dtypes)["ts"] == "timestamp_ntz"
+    assert sc.getLocalProperty("spark.jobGroup.id") is None

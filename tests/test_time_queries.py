@@ -73,3 +73,50 @@ def test_budget_cancels_and_leaves_the_session_usable(spark, sf_dir):
     cells, _ = tq.run(spark, ["revenue_by_nation"], [sf_dir], runs=1)
     (cell,) = cells["revenue_by_nation"]
     assert len(cell["runs"]) == 1 and cell["min_sec"] > 0
+
+
+def test_budget_cancels_only_once_a_job_is_running(monkeypatch):
+    """Past its budget a query still building its plan has no job to
+    cancel: no cancelJobGroup call until one of its jobs is active, then
+    a cancel follows and the caller gets TimeoutError. Spark-free: the
+    context and the query are fakes."""
+    import threading
+    import time
+    import types
+
+    class Context:
+        def __init__(self):
+            self.group_jobs: list[int] = []
+            self.active: list[int] = []
+            self.cancels: list[list[int]] = []  # active jobs at each cancel
+            self.cancelled = threading.Event()
+
+        def setJobGroup(self, *a, **k):
+            pass
+
+        def statusTracker(self):
+            return types.SimpleNamespace(
+                getJobIdsForGroup=lambda group: list(self.group_jobs),
+                getActiveJobsIds=lambda: list(self.active),
+            )
+
+        def cancelJobGroup(self, group):
+            self.cancels.append(list(self.active))
+            self.active.clear()
+            self.cancelled.set()
+
+    sc = Context()
+
+    def query(spark, fn, sf_dir, **kw):
+        time.sleep(1.2)  # plan building: two polls pass with no job
+        sc.group_jobs.append(7)
+        sc.active.append(7)
+        assert sc.cancelled.wait(5)
+        raise RuntimeError("job 7 cancelled")
+
+    monkeypatch.setattr(tq, "time_query", query)
+    with pytest.raises(TimeoutError):
+        tq._time_in_group(
+            types.SimpleNamespace(sparkContext=sc), "revenue_by_nation", "dir", 0.05
+        )
+    assert sc.cancels == [[7]]

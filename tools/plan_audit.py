@@ -142,7 +142,7 @@ AUDITED = {
     "seasonal_naive_backtest": "self-join runs on the (priority x day) aggregate, never the fact; date-shifted equi-join, gap-correct",
     "crossval_fold_assign": "pure map-side hash expression + one aggregate; no shuffle beyond the final 5-group agg",
     "passage_chunk_overlap": "scan-side explode of arithmetic chunk offsets; zero shuffles, zero UDFs",
-    "interpolate_linear_gaps": "grid explode + four IGNORE-NULLS windows over ONE user_id shuffle; rational integer output",
+    "interpolate_linear_gaps": "ONE user_id-keyed window (lead + IGNORE-NULLS prev/next) over the hourly aggregate, then the grid explode; the ~1M-row grid is never shuffled or sorted; rational integer output",
     "sample_exact_n_per_group": "rank window on the group key only; per-group top-20 by deterministic hash order",
     "snapshot_rollback_restore": "metadata-only restore: new manifest reuses v1's file list; reads scan exactly the manifest files",
     "bloom_runtime_filter_join": "might_contain(xxhash64) runtime filter pushed into the fact scan from the selective dim side; rows that cannot match die before the shuffle",
@@ -187,7 +187,7 @@ AUDITED = {
     "semdedup_cell_prune": "int8 quantization + norms scan-side; 16-centroid broadcast crossJoin for assignment; dedup self-join shuffles ONCE on cell; n_cells is the scale knob",
     "changepoint_mean_shift": "daily rollup map-side combined; running sums via forward running frames (never unbounded-following); per-type top-1 window; integer scores",
     "mixture_temperature_alloc": "per-source partial agg; sqrt weights + apportionment over the source dimension under bounded_window_key; floor(sqrt) is IEEE-portable",
-    "ppjoin_prefix_filter_pairs": "prefix index keeps ~40% of postings and ONLY the rarest tokens - the m^2 blowup concentrates where m is smallest; df ranking broadcast; verify join candidate-bounded; r13: postings + prefix staged via _stage (posts was re-planned SIX times: 6 documents scans -> 0 re-scans)",
+    "ppjoin_prefix_filter_pairs": "prefix index keeps ~40% of postings and ONLY the rarest tokens - the m^2 blowup concentrates where m is smallest; df is a shingle-keyed count window; ONE staged per-document frame (sorted (df, shingle) array, prefix slice) feeds the prefix self-join and both verify sides; verify is size(array_intersect), no postings join",
     "label_propagation_two_rounds": "per round: edge-list join with label vector + (dst,label) agg + per-node top-1 window - the PageRank skeleton with argmax",
     "text_normalize_canonical": "three codegen string kernels in the scan; zero shuffles",
     "leakage_safe_split_assign": "CC iteration dominates (ids-only shuffle-joins per diameter round); split is scan-side md5 on the CC output",

@@ -52,9 +52,9 @@ from dist_keras_spark.plans import ORACLE, QUERIES  # noqa: E402
 from dist_keras_spark.session import get_spark  # noqa: E402
 
 TRACE_PATH = os.path.join(REPO, "bench_extended_trace.json")
-# After a budget runs out, keep cancelling the group while the query's
-# thread finishes: a thread still building its plan starts its job
-# after the first cancel.
+# After a budget runs out, keep cancelling the group's running jobs
+# while the query's thread finishes: a thread still building its plan
+# starts its jobs later.
 CANCEL_GRACE_SEC = 30.0
 
 
@@ -113,9 +113,13 @@ def _time_in_group(spark, name: str, sf_dir: str, budget: float | None, **kw) ->
     t.start()
     t.join(budget)
     if t.is_alive():
+        tracker = sc.statusTracker()
         deadline = time.monotonic() + CANCEL_GRACE_SEC
         while t.is_alive() and time.monotonic() < deadline:
-            sc.cancelJobGroup(name)
+            # cancelJobGroup only reaches running jobs (and logs a WARN
+            # when there are none), so wait out plan building.
+            if set(tracker.getJobIdsForGroup(name)) & set(tracker.getActiveJobsIds()):
+                sc.cancelJobGroup(name)
             t.join(0.5)
         raise TimeoutError(name)
     if "error" in out:
